@@ -26,16 +26,28 @@ package graft
   */
 object LocalScratch {
 
-  /** Preferred node-local scratch dir: env override, else /dev/shm when
-    * usable, else the JVM temp dir (Spark's own default behavior).
+  /** Preferred node-local scratch dir: env override, else a per-user dir
+    * under /dev/shm when usable, else the JVM temp dir (Spark's own
+    * default behavior).
     */
   def dir(): String =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").getOrElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) {
-        val d = new java.io.File(shm, "graft_spark_local")
-        d.mkdirs()
-        d.getAbsolutePath
-      } else System.getProperty("java.io.tmpdir", "/tmp")
-    }
+    sys.env.get("SPARK_GRAFT_LOCAL_DIR").getOrElse(
+      under(new java.io.File("/dev/shm"), System.getProperty("user.name", "")))
+
+  /** `graft_spark_local_<user>` under `base`, created if missing, when it is
+    * a real (non-symlink) directory that `user` owns and this process can
+    * write; else the JVM temp dir. Keying by user keeps the users of a
+    * shared box out of each other's directory, and checking here fails at
+    * selection time instead of late inside Spark's shuffle-dir creation.
+    */
+  private[graft] def under(base: java.io.File, user: String): String = {
+    val d = new java.io.File(base,
+      "graft_spark_local_" + user.replaceAll("[^A-Za-z0-9._-]", "_"))
+    val p = d.toPath
+    val usable = base.isDirectory && !java.nio.file.Files.isSymbolicLink(p) &&
+      (d.isDirectory || d.mkdirs()) && d.canWrite &&
+      scala.util.Try(java.nio.file.Files.getOwner(p).getName == user).getOrElse(false)
+    if (usable) d.getAbsolutePath
+    else System.getProperty("java.io.tmpdir", "/tmp")
+  }
 }

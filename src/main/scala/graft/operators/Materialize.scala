@@ -31,6 +31,17 @@ object Materialize {
     */
   def once(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
+  /** Drop the blocks behind a [[once]] result now, instead of whenever the
+    * ContextCleaner next collects it: for a long-lived session that holds
+    * on to the result (or to a plan that embeds it) past its last read.
+    * The result must not be read afterwards.
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.logical.foreach {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      r.rdd.unpersist(blocking = true)
+    case _ =>
+  }
+
   implicit final class MaterializeOps(private val df: DataFrame)
       extends AnyVal {
     /** Chain form of [[Materialize.once]]. */

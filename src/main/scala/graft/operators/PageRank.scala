@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-round damped PageRank over an edge list — the authority signal a
@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   *   - dangling mass is dropped (teleport-only redistribution), the
   *     standard sparse-graph simplification
   *
+  * The ranks depend only on the graph and on N, never on the node
+  * values, so any key type with equality works as a node id.
+  *
   * Scale posture: each round is one equi-join of the edge relation with
   * the (node, rank) relation plus one groupBy(dst) — shuffle ∝ |E|, no
   * global window, no driver-side graph. Edges and out-degrees are computed
@@ -38,42 +41,9 @@ object PageRank {
     * [[runWeighted]].
     */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, damping: Double = 0.85): DataFrame = {
-    require(iters >= 1 && iters <= 16, "iters must be in [1, 16]")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().persist()
-    // scalar aggregate, not a data collect: N is one number
-    val n = nodes.count()
-    val teleportMicro = math.round((1.0 - damping) * 1e6 / n)
-    // Out-degrees are STATIC across rounds — attach them to the edge
-    // relation once, instead of paying an extra (src)-keyed join inside
-    // every round. eDeg is hash-partitioned by src (the groupBy/join key),
-    // and localCheckpoint preserves that partitioning, so each round's
-    // rank join only exchanges the (node, rank) side.
-    val eDeg = graft.operators.Materialize.once(
-      e.join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), Seq("src")))
-    val init = nodes.select(col("node"),
-      lit(math.round(1e6 / n)).as("rank_micro"))
-    val ranks = (1 to iters).foldLeft(init) { (r, _) =>
-      val contribs = eDeg
-        .join(r.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"),
-          round(col("rank_micro").cast("double") / col("deg"))
-            .cast("long").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("sc"))
-      nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(teleportMicro) +
-            round(coalesce(col("sc"), lit(0L)) * damping).cast("long"))
-            .as("rank_micro"))
-    }
-    // one materialization of the final ranks, then drop the cached inputs
-    val out = ranks.localCheckpoint(true)
-    e.unpersist(); nodes.unpersist()
-    out
-  }
+      iters: Int, damping: Double = 0.85): DataFrame =
+    rounds(edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")), None, iters, damping)
 
   /** [[run]] over a pre-collapsed weighted edge relation: `wCol` is the
     * edge MULTIPLICITY (a positive integral count). Exactly equivalent to
@@ -85,18 +55,27 @@ object PageRank {
     * dense: the TextRank shape feeds ~1M co-occurrence rows over ≤ 10³
     * distinct pairs, and without this every ROUND re-shuffled the full
     * multiplicity instead of the distinct relation.
+    *
+    * @return (node, rank_micro: long); `node` keeps the type of the key
+    *   columns (TextRank ranks token strings directly).
     */
   def runWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-      wCol: String, iters: Int, damping: Double = 0.85): DataFrame = {
-    require(iters >= 1 && iters <= 16, "iters must be in [1, 16]")
+      wCol: String, iters: Int, damping: Double = 0.85): DataFrame =
     // re-aggregate defensively: callers may pass a relation that still
     // carries duplicate (src, dst) rows (weights are additive)
-    val eW = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"), col(wCol).cast("long").as("__w"))
-      .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("__w"))
-      .persist()
-    val nodes = eW.select(col("src").as("node"))
-      .union(eW.select(col("dst").as("node"))).distinct().persist()
+    rounds(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+        col(wCol).cast("long").as("__w"))
+      .groupBy(col("src"), col("dst")).agg(sum(col("__w")).as("__w")),
+      Some(col("__w")), iters, damping)
+
+  /** The round loop over (src, dst[, multiplicity]) edges. Without a
+    * multiplicity every row is one edge, so no (src, dst) collapse runs. */
+  private def rounds(edges: DataFrame, mult: Option[Column],
+      iters: Int, damping: Double): DataFrame = {
+    require(iters >= 1 && iters <= 16, "iters must be in [1, 16]")
+    val e = edges.persist()
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct().persist()
     // scalar aggregate, not a data collect: N is one number
     val n = nodes.count()
     val teleportMicro = math.round((1.0 - damping) * 1e6 / n)
@@ -106,16 +85,16 @@ object PageRank {
     // and localCheckpoint preserves that partitioning, so each round's
     // rank join only exchanges the (node, rank) side.
     val eDeg = graft.operators.Materialize.once(
-      eW.join(eW.groupBy(col("src")).agg(sum(col("__w")).as("deg")),
-        Seq("src")))
+      e.join(e.groupBy(col("src"))
+        .agg(mult.fold(count(lit(1)))(sum(_)).as("deg")), Seq("src")))
     val init = nodes.select(col("node"),
       lit(math.round(1e6 / n)).as("rank_micro"))
     val ranks = (1 to iters).foldLeft(init) { (r, _) =>
+      val share = round(col("rank_micro").cast("double") / col("deg"))
+        .cast("long")
       val contribs = eDeg
         .join(r.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"),
-          (round(col("rank_micro").cast("double") / col("deg"))
-            .cast("long") * col("__w")).as("c"))
+        .select(col("dst").as("node"), mult.fold(share)(share * _).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("sc"))
       nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
@@ -125,7 +104,7 @@ object PageRank {
     }
     // one materialization of the final ranks, then drop the cached inputs
     val out = ranks.localCheckpoint(true)
-    eW.unpersist(); nodes.unpersist()
+    e.unpersist(); nodes.unpersist()
     out
   }
 }

@@ -160,9 +160,11 @@ object TrainingQueries {
 
   /** BPE-style merge training, 3 rounds ([[graft.text.BpeTrainer]]): each
     * round's winning pair, its count, and the corpus size after the merge.
-    * The greedy-leftmost merge rule is gaps-and-islands (even offsets within
-    * match runs), so the oracle replays all three rounds with unrolled CTEs
-    * — the iterative trainer is under the hash gate end to end.
+    * The trainer merges with a per-document greedy-leftmost scan; the
+    * oracle replays the same rule relationally (gaps-and-islands: even
+    * offsets within runs of adjacent matches merge) over all three rounds
+    * with unrolled CTEs — the iterative trainer is under the hash gate end
+    * to end.
     */
   def q88BpeMerges(s: SparkSession, dir: String): DataFrame =
     graft.text.BpeTrainer.train(Tables.documents(s, dir), "text", "doc_id",
@@ -290,11 +292,12 @@ object TrainingQueries {
       |ORDER BY abs(score) DESC, vec_id LIMIT 50""".stripMargin
 
   /** TextRank keyword extraction ([[graft.text.TextRank.keywords]]):
-    * window-2 co-occurrence edges (lead() windows, no positional
-    * self-join) → the gated fixed-round micro-quantized PageRank →
-    * top-20 tokens. The oracle rebuilds the graph with the bigram-list
-    * trick, assigns the same sorted-vocabulary ids, and unrolls the
-    * identical three ranking rounds.
+    * window-2 co-occurrence edges (read off each document's token array,
+    * no positional self-join) → the gated fixed-round micro-quantized
+    * PageRank over the token strings → top-20 tokens. The oracle rebuilds
+    * the graph with the bigram-list trick, ranks sorted-vocabulary ids
+    * instead of strings (ranks depend only on the graph and N, so the two
+    * agree), and unrolls the identical three ranking rounds.
     */
   def q171TextRank(s: SparkSession, dir: String): DataFrame =
     graft.text.TextRank.keywords(Tables.documents(s, dir), "text", "doc_id",

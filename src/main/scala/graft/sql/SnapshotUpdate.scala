@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, ExprId, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, LogicalPlan, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -71,7 +71,9 @@ private[sql] object DmlRebind {
     * the rewrite's existing subquery-split path evaluates as a semi join
     * against the pinned base — the scalable plan for a fact-sized key
     * set (collecting it would be O(keys) driver work and a giant literal
-    * list in every task's generated code).
+    * list in every task's generated code). Each such key set is handed to
+    * `pinned`; the command releases it after it commits
+    * ([[releasingPinned]]).
     * Runs BEFORE the rewrite evaluates anything, so the touched-partition
     * discovery and the rewrite see the SAME values (the same reason
     * clause expressions must be deterministic). Correlated subqueries are
@@ -80,7 +82,8 @@ private[sql] object DmlRebind {
     * spell it as MERGE.
     */
   def materializeSubqueries(spark: SparkSession, e: Expression,
-      subqueryPastCap: Boolean = false): Expression =
+      subqueryPastCap: Boolean = false,
+      pinned: DataFrame => Unit = _ => ()): Expression =
     e.transformUp {
       case s: org.apache.spark.sql.catalyst.expressions.ScalarSubquery =>
         val rows = bridge.ofRows(spark, s.plan).limit(2)
@@ -124,6 +127,7 @@ private[sql] object DmlRebind {
           // and let the optimizer's predicate-subquery rewrite plan it as
           // a semi join. No driver materialization of a fact-sized list.
           val mat = graft.operators.Materialize.once(df)
+          pinned(mat) // the caller releases it once its command commits
           org.apache.spark.sql.catalyst.expressions.InSubquery(in.values,
             in.query.withNewPlan(mat.queryExecution.analyzed))
         } else {
@@ -136,6 +140,18 @@ private[sql] object DmlRebind {
           else org.apache.spark.sql.catalyst.expressions.In(in.values.head, lits)
         }
     }
+
+  /** Run a command `body` that pins key sets through
+    * [[materializeSubqueries]]' `pinned` hook, and release them once it
+    * returns (committed or failed): the pinned blocks would otherwise stay
+    * in block-manager storage until the ContextCleaner happens to collect
+    * them — a slow leak across the statements of a long session.
+    */
+  def releasingPinned[T](body: (DataFrame => Unit) => T): T = {
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body(pinned += _)
+    finally pinned.foreach(graft.operators.Materialize.release)
+  }
 
   /** STATIC partition-pruning predicate from a collected touched-partition
     * list (dimension-sized): unlike a broadcast-semi-join against the same
@@ -414,7 +430,10 @@ case class SnapshotDeleteCommand(
     program: SnapshotUpdate.DeleteProgram)
   extends LeafRunnableCommand {
 
-  override def run(spark: SparkSession): Seq[Row] = {
+  override def run(spark: SparkSession): Seq[Row] =
+    DmlRebind.releasingPinned(runPinned(spark, _))
+
+  private def runPinned(spark: SparkSession, pin: DataFrame => Unit): Seq[Row] = {
     // resolve latest ONCE, before the subqueries evaluate: everything this
     // statement reads (uncorrelated subqueries — possibly of this very
     // table — and the delete scan) must see one version, and a commit
@@ -424,7 +443,7 @@ case class SnapshotDeleteCommand(
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot of $table to delete from"))
     val inlined = DmlRebind.materializeSubqueries(spark, program.cond,
-      subqueryPastCap = true) // filter position: a big IN stays a semi join
+      subqueryPastCap = true, pin) // filter position: a big IN stays a semi join
     inlined match {
       case org.apache.spark.sql.catalyst.expressions.Literal(true,
           org.apache.spark.sql.types.BooleanType) =>
@@ -452,7 +471,10 @@ case class SnapshotUpdateCommand(
     program: SnapshotUpdate.UpdateProgram)
   extends LeafRunnableCommand {
 
-  override def run(spark: SparkSession): Seq[Row] = {
+  override def run(spark: SparkSession): Seq[Row] =
+    DmlRebind.releasingPinned(runPinned(spark, _))
+
+  private def runPinned(spark: SparkSession, pin: DataFrame => Unit): Seq[Row] = {
     import graft.lake.Snapshots
     val latest = Snapshots.latestVersion(spark, root, table).getOrElse(
       throw new IllegalArgumentException(s"no snapshot of $table to update"))
@@ -466,7 +488,7 @@ case class SnapshotUpdateCommand(
     val assignOf: Map[String, Expression] = program.assigns.map {
       case (n, v) => (n, DmlRebind.materializeSubqueries(spark, v)) }.toMap
     val cond = program.cond.map(DmlRebind.materializeSubqueries(spark, _,
-      subqueryPastCap = true)) // WHERE is filter position: big IN → semi join
+      subqueryPastCap = true, pin)) // WHERE is filter position: big IN → semi join
     // null predicate = false, per SQL WHERE semantics
     val hit = cond
       .map(e => coalesce(bridge.column(remap(e)), lit(false)))

@@ -45,17 +45,25 @@ object BpeEncoder {
       if (best == Int.MaxValue) done = true
       else {
         val (l, r) = merges(best)
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        var j = 0
-        while (j < toks.length) {
-          if (j < toks.length - 1 && toks(j) == l && toks(j + 1) == r) {
-            out += l + " " + r; j += 2   // greedy-leftmost non-overlap
-          } else { out += toks(j); j += 1 }
-        }
-        toks = out.toIndexedSeq
+        toks = mergePair(toks, l, r)
       }
     }
     toks
+  }
+
+  /** One merge step over one token stream: fuse the greedy-leftmost
+    * non-overlapping occurrences of the pair (l, r) into one token. The
+    * kernel [[BpeTrainer]] maps over each document per round.
+    */
+  def mergePair(toks: IndexedSeq[String], l: String, r: String): IndexedSeq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var j = 0
+    while (j < toks.length) {
+      if (j < toks.length - 1 && toks(j) == l && toks(j + 1) == r) {
+        out += l + " " + r; j += 2   // greedy-leftmost non-overlap
+      } else { out += toks(j); j += 1 }
+    }
+    out.toIndexedSeq
   }
 
   /** Per-document encode stats: (id, n_words, n_tokens, n_merged). */

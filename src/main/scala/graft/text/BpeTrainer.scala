@@ -1,8 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** BPE-style merge training over a word-token corpus: each round counts
   * adjacent token pairs, picks the most frequent (ties broken by pair text
@@ -10,119 +9,65 @@ import org.apache.spark.sql.expressions.Window
   * into one token — the vocabulary-induction primitive of tokenizer
   * training, here at word level (merged pieces join with a space).
   *
-  * Everything is relational — the corpus lives as (id, pos, tok) rows:
-  *  - adjacency is `lead(tok)` over (id, pos), not a self-join;
-  *  - greedy leftmost non-overlap is gaps-and-islands: within each maximal
-  *    run of consecutive match positions, exactly the even offsets merge
-  *    (provably equal to the sequential greedy scan), so no per-row
-  *    fold/UDF is needed and a SQL oracle replays the rule verbatim;
-  *  - per round: the windows and groupBy all hash-partition by `id` (or by
-  *    the tiny pair key), so one exchange per round is reused across the
-  *    window steps; the winner is a 1-row aggregate collected to the
-  *    driver (the merge table IS driver-sized by definition).
+  * The corpus lives as ONE token array per document, spread and
+  * materialized once. Each round is then:
+  *  - a pair count: the adjacent pairs of every array, exploded and
+  *    grouped by (l, r) — the only shuffle, and it moves partial counts of
+  *    distinct pairs, not tokens; the winner is a 1-row aggregate
+  *    collected to the driver (the merge table IS driver-sized by
+  *    definition);
+  *  - the merge: a narrow per-document map running the same
+  *    greedy-leftmost kernel as [[BpeEncoder.encode]]
+  *    ([[BpeEncoder.mergePair]]);
+  *  - the materialization of the new generation, which also observes its
+  *    token count (`tokens_after`) in the same job.
   *
   * Scale: rounds are sequential by nature (each merge changes the next
   * round's pair counts — same loop structure as production BPE trainers);
-  * each round is a full corpus pass of narrow maps + windows over the id
-  * partitioning. Persist alternate generations and unpersist the old.
+  * each round costs one pass over the corpus for the counts and one for the
+  * merge, with no per-token shuffle, sort or join.
   */
 object BpeTrainer {
-
-  /** (id, pos, tok) exploded token corpus. Spread by id BEFORE the
-    * tokenize/explode: a few-file corpus scan would serialize the whole
-    * explode onto one core, and hashing by id pre-partitions for every
-    * round's (id)-keyed window so round 1 reuses this exchange.
-    */
-  def tokensExploded(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    graft.operators.Parallelism.spreadBy(df, col(idCol))
-      .select(col(idCol).as("id"),
-        posexplode(TextFunctions.tokens(col(textCol))).as(Seq("pos", "tok")))
-
-  /** One merge round: returns (winner_left, winner_right, count, corpus
-    * after merging). Returns None when no adjacent pair exists.
-    */
-  private def round(
-      toks: DataFrame): Option[(String, String, Long, DataFrame, DataFrame)] = {
-    val w = Window.partitionBy(col("id")).orderBy(col("pos"))
-    // lead() and the dense order index share one window spec → ONE
-    // id-partitioned sort per round; persisted because three consumers
-    // (pair counts, match scan, rebuild) read it.
-    val withNext = toks
-      .select(col("id"), col("tok"),
-        lead(col("tok"), 1).over(w).as("next"),
-        row_number().over(w).as("idx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val top = withNext.filter(col("next").isNotNull)
-      .groupBy(col("tok"), col("next")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc, col("tok").asc, col("next").asc)
-      .limit(1).collect()
-    if (top.isEmpty) { withNext.unpersist(); return None }
-    val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-
-    // Greedy leftmost non-overlap: matches overlap iff adjacent in the
-    // token ORDER (idx differs by 1), so islands partition on idx − rn and
-    // even offsets within each island merge.
-    val matches = withNext
-      .filter(col("tok") === l && col("next") === r)
-      .withColumn("rn",
-        row_number().over(Window.partitionBy(col("id")).orderBy(col("idx"))))
-      .withColumn("off",
-        col("rn") - min(col("rn")).over(
-          Window.partitionBy(col("id"), col("idx") - col("rn"))))
-      .filter(col("off") % 2 === 0)
-      .select(col("id"), col("idx"))
-
-    // The match set holds only the winning pair's occurrences — orders of
-    // magnitude smaller than the corpus — so ONE broadcast marker join
-    // (merge points and drop points union'd; selected matches are never
-    // adjacent, so the keys are disjoint) instead of shuffling the corpus
-    // on (id, idx). (For a corpus where one pair dominates, drop the hint
-    // and let AQE decide.)
-    val markers = matches.select(col("id"), col("idx"), lit(1).as("mk"))
-      .unionByName(matches.select(col("id"), (col("idx") + 1).as("idx"), lit(2).as("mk")))
-    // The new generation keeps idx as its (gap-free-ORDER, gappy-VALUE)
-    // position: adjacency only needs order, and the next round's window
-    // re-densifies — no second corpus sort for renumbering.
-    val next = withNext
-      .join(broadcast(markers), Seq("id", "idx"), "left")
-      .filter(col("mk").isNull || col("mk") === 1)
-      .select(col("id"), col("idx").as("pos"),
-        when(col("mk") === 1, concat(col("tok"), lit(" "), col("next")))
-          .otherwise(col("tok")).as("tok"))
-    Some((l, r, c, next, withNext))
-  }
 
   /** Train `rounds` merges; returns one row per round:
     * (round, lhs, rhs, cnt, tokens_after).
     */
   def train(df: DataFrame, textCol: String, idCol: String, rounds: Int): DataFrame = {
     val spark = df.sparkSession
-    import scala.collection.mutable.ArrayBuffer
-    val out = ArrayBuffer.empty[(Int, String, String, Long, Long)]
+    import spark.implicits._
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long, Long)]
+    // Spread by id BEFORE the tokenize: a few-file corpus scan would
+    // serialize the tokenization and every round's map onto one core.
+    // Null text has no tokens (and `size(null)` must never reach a count).
     // Each generation is MATERIALIZED (eager localCheckpoint): generation N
     // is a plan leaf, so round N+1 analyses a constant-size DAG instead of
-    // N nested merge-apply layers — at a real vocab size (30k merges) the
-    // replanning cost of a growing lineage dominates long before the data.
-    // Superseded generations become unreachable when `toks` is rebound and
-    // are reclaimed by the ContextCleaner; the per-round `scratch` window
-    // relation keeps its deterministic persist/unpersist lifecycle.
-    var toks = graft.operators.Materialize.once(
-      tokensExploded(df, textCol, idCol))
+    // N nested merge layers. Superseded generations become unreachable
+    // when `gen` is rebound and are reclaimed by the ContextCleaner.
+    var gen = graft.operators.Materialize.once(
+      graft.operators.Parallelism.spreadBy(df, col(idCol))
+        .select(TextFunctions.tokens(col(textCol)).as("toks"))
+        .filter(col("toks").isNotNull))
     var i = 1
     var done = false
     while (i <= rounds && !done) {
-      round(toks) match {
-        case Some((l, r, c, next, scratch)) =>
-          val materialized = graft.operators.Materialize.once(next)
-          val n = materialized.count()
-          scratch.unpersist()
-          toks = materialized
-          out += ((i, l, r, c, n))
-          i += 1
-        case None => done = true
+      val top = gen
+        .select(explode(TextFunctions.tokenPairs(col("toks"), 1)).as("p"))
+        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(count(lit(1)).as("c"))
+        .orderBy(col("c").desc, col("l").asc, col("r").asc)
+        .limit(1).collect() // the 1-row winner
+      if (top.isEmpty) done = true
+      else {
+        val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+        val tokensAfter = new Observation()
+        gen = graft.operators.Materialize.once(gen.as[Seq[String]]
+          .map(ws => BpeEncoder.mergePair(ws.toIndexedSeq, l, r))
+          .toDF("toks")
+          .observe(tokensAfter, sum(size(col("toks"))).as("n")))
+        out += ((i, l, r, c, tokensAfter.get("n").asInstanceOf[Long]))
+        i += 1
       }
     }
-    import spark.implicits._
     out.toSeq.toDF("round", "lhs", "rhs", "cnt", "tokens_after")
   }
 }

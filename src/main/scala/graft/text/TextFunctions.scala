@@ -20,6 +20,16 @@ object TextFunctions {
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
+  /** The pairs (t[i], t[i + offset]) of a token array, in order, as an
+    * array of (l, r) structs; empty when the array is shorter than
+    * `offset + 1`, null when it is null.
+    */
+  def tokenPairs(toks: Column, offset: Int): Column = {
+    val n = greatest(size(toks) - offset, lit(0))
+    zip_with(slice(toks, lit(1), n), slice(toks, lit(1 + offset), n),
+      (l, r) => struct(l.as("l"), r.as("r")))
+  }
+
   /** GPT-style pre-tokenizer piece pattern (the BPE input segmentation):
     * contractions, space-prefixed letter runs, space-prefixed digit runs,
     * space-prefixed punctuation runs, residual whitespace. Deliberately

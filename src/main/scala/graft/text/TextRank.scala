@@ -1,20 +1,21 @@
 package graft.text
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
 
 /** TextRank keyword extraction (Mihalcea & Tarau 2004) as an operator
   * COMPOSITION: token co-occurrence graph (positions within `window` in
   * the same document, both directions, multiplicity = edge weight) fed
   * into the fixed-round micro-quantized [[graft.operators.PageRank]].
-  * No new iterative machinery — the graph construction is per-document
-  * lead() windows (no self-join), the vocabulary id assignment is the
-  * distributed [[graft.operators.GlobalOrder]] dense rank (the vocabulary
-  * GROWS with corpus diversity, so no single-row array agg and no
-  * mandatory broadcast may sit on that path), and the ranking rounds are
-  * the already-gated PageRank rounds, so the whole extraction replays as
-  * SQL CTEs.
+  * No new iterative machinery — the graph construction is a per-document
+  * array map (no self-join, no per-token sort), the ranking rounds are the
+  * already-gated PageRank rounds over the token strings themselves, so the
+  * whole extraction replays as SQL CTEs.
+  *
+  * No vocabulary ids: PageRank's ranks depend only on the graph and on the
+  * node count, never on the node values, so ranking the strings directly
+  * gives the same ranks as ranking dense token ids would — without the
+  * id assignment and the joins that map tokens to ids and back.
   */
 object TextRank {
 
@@ -22,57 +23,29 @@ object TextRank {
   def keywords(docs: DataFrame, textCol: String, idCol: String,
       window: Int = 2, iters: Int = 3, topK: Int = 20): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    // Hash-spread by doc BEFORE the tokenize/explode: parallelizes the
-    // tokenization off a few-file scan, shuffles raw docs instead of
-    // exploded tokens, and pre-partitions for the lead() window below
-    // (same key → the window reuses this exchange).
+    // Hash-spread by doc BEFORE the tokenize: parallelizes the
+    // tokenization off a few-file scan and shuffles raw docs, not tokens.
     val toks = graft.operators.Parallelism.spreadBy(docs, col(idCol))
-      .select(col(idCol).as("doc"),
-        posexplode(TextFunctions.tokens(col(textCol))).as(Seq("pos", "tok")))
-    // vocabulary ids: distributed dense rank over the distinct tokens —
-    // the two-phase prefix sum, NOT the single-row sorted-array idiom:
-    // vocabulary cardinality grows with corpus diversity, and a
-    // web-scale vocab in one array row is a driver/executor OOM. Values
-    // are identical to the sorted-distinct assignment (1-based rank in
-    // ascending token order).
-    val vocab = graft.operators.GlobalOrder
-      .runningRowNumber(toks.select(col("tok")).distinct(), Seq("tok"), "tid")
-      .select(col("tid"), col("tok"))
-    val wDoc = W.partitionBy(col("doc")).orderBy(col("pos"))
-    // undirected co-occurrence edges via lead() — no positional self-join.
-    // ALL `window` lead offsets are computed in ONE pass over ONE
-    // (doc, pos) sort (they share the window spec), then exploded — not
-    // one window pass per offset unioned after.
-    val leads = (1 to window).map(o => lead(col("tok"), o).over(wDoc))
+      .select(TextFunctions.tokens(col(textCol)).as("t"))
+    // Co-occurrence pairs (t[i], t[i + o]) for every offset o ≤ window,
+    // read straight off each document's token array.
     val pairs = toks
-      .select(col("tok").as("a"), array(leads: _*).as("__nbrs"))
-      .select(col("a"), explode(col("__nbrs")).as("b"))
-      .filter(col("b").isNotNull)
-    // Collapse to (a, b, multiplicity) BEFORE anything joins or mirrors
-    // (guide §2.3): co-occurrence multiplicity is dense (a corpus re-uses
-    // its vocabulary constantly), so the distinct-pair relation is orders
-    // of magnitude smaller than the positional pair stream — the vocab
-    // joins, the mirror union, and every PageRank round then move the
-    // distinct relation, not the corpus. Weights are exact edge counts;
-    // PageRank.runWeighted is bit-identical to the expanded rounds.
+      .select(explode(concat((1 to window).map(o =>
+        TextFunctions.tokenPairs(col("t"), o)): _*)).as("p"))
+      .select(col("p.l").as("a"), col("p.r").as("b"))
+    // Collapse to (a, b, multiplicity) BEFORE anything mirrors (guide
+    // §2.3): co-occurrence multiplicity is dense (a corpus re-uses its
+    // vocabulary constantly), so the distinct-pair relation is orders of
+    // magnitude smaller than the positional pair stream — the mirror
+    // union and every PageRank round then move the distinct relation,
+    // not the corpus. Weights are exact edge counts; PageRank.runWeighted
+    // is bit-identical to the expanded rounds.
     val pairsW = pairs.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("__w"))
-    // no broadcast HINT on the vocab joins: the vocab grows with the
-    // corpus, so the join must be free to shuffle; AQE still broadcasts
-    // it at runtime whenever it is actually small.
-    // The reverse direction is mirrored AFTER the id joins: (a,b) and
-    // (b,a) map through the same token→tid function, so flipping the
-    // resolved int pair is identical to resolving the flipped string
-    // pair — at half the join input and half the string shuffle bytes.
-    val fwd = pairsW
-      .join(vocab.select(col("tok").as("a"), col("tid").as("src")), "a")
-      .join(vocab.select(col("tok").as("b"), col("tid").as("dst")), "b")
-      .select(col("src"), col("dst"), col("__w"))
-    val edges = fwd.unionByName(
-      fwd.select(col("dst").as("src"), col("src").as("dst"), col("__w")))
+    val edges = pairsW.select(col("a").as("src"), col("b").as("dst"), col("__w"))
+      .unionByName(pairsW.select(col("b").as("src"), col("a").as("dst"), col("__w")))
     graft.operators.PageRank.runWeighted(edges, "src", "dst", "__w", iters)
-      .join(vocab.select(col("tid").as("node"), col("tok")), "node")
-      .select(col("tok").as("token"), col("rank_micro"))
+      .select(col("node").as("token"), col("rank_micro"))
       .orderBy(col("rank_micro").desc, col("token").asc)
       .limit(topK)
   }

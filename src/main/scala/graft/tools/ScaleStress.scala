@@ -417,9 +417,8 @@ object ScaleStress {
     // with (copy index, doc_id % 1000) — token universes are disjoint
     // across copies AND across doc buckets, so the vocabulary grows to
     // 31 × 1000 × copies distinct tokens (3.1M at x100), stressing the
-    // GlobalOrder dense-rank id assignment (the driver-bounded
-    // sorted-array idiom this round replaced) and a PageRank over a
-    // node set that grows ∝ corpus.
+    // co-occurrence collapse and a PageRank over a node set that grows
+    // ∝ corpus.
     val runTextrank = sys.env.getOrElse("SPARK_GRAFT_TEXTRANK", "0") != "0"
     for (f <- scales if runTextrank) {
       val dir = s"/tmp/graft_scale_textrank_x$f"

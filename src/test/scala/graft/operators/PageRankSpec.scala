@@ -49,4 +49,18 @@ class PageRankSpec extends SparkTestBase {
     // node 2 gets 2/3 of node 1's mass, node 3 gets 1/3
     assert(m(2L) > m(3L))
   }
+
+  test("runWeighted keeps the key type and ranks like run over the " +
+      "expanded multigraph") {
+    val multi = Seq((1L, 2L, 3L), (2L, 1L, 1L), (2L, 3L, 2L), (3L, 1L, 1L),
+      (4L, 3L, 5L), (1L, 2L, 1L)) // (1, 2) twice: weights add up
+    val expanded = multi.flatMap { case (a, b, w) => Seq.fill(w.toInt)((a, b)) }
+      .toDF("src", "dst")
+    val byRun = PageRank.run(expanded, "src", "dst", iters = 3)
+      .as[(Long, Long)].collect().map { case (v, r) => (s"n$v", r) }.toMap
+    val named = multi.map { case (a, b, w) => (s"n$a", s"n$b", w) }.toDF("a", "b", "w")
+    val weighted = PageRank.runWeighted(named, "a", "b", "w", iters = 3)
+    assert(weighted.schema("node").dataType === org.apache.spark.sql.types.StringType)
+    assert(weighted.as[(String, Long)].collect().toMap === byRun)
+  }
 }

@@ -195,6 +195,33 @@ class SnapshotUpdateSpec extends SparkTestBase {
     assert(widened.getMessage.contains("MERGE"), widened.getMessage)
   }
 
+  test("big-IN DELETEs and UPDATEs release their materialized key sets: " +
+      "block-manager storage returns to its baseline") {
+    val root = freshRoot(); stage(root) // ids 0..39, bal = id*10, p = id%4
+    // RDD blocks stored right now, by RDD id (other suites may hold some)
+    def storedRdds: Set[Int] = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    spark.conf.set("spark.graft.dml.maxInlineSubqueryRows", "2")
+    try {
+      val baseline = storedRdds
+      for (k <- 0 until 4) {
+        // 10 keys each, past the cap of 2: the key set is materialized
+        spark.sql(s"""DELETE FROM graftu.t
+                      WHERE id IN (SELECT id FROM graftu.t WHERE id % 4 = $k)""")
+        assert(storedRdds.subsetOf(baseline),
+          s"DELETE $k left blocks behind: ${storedRdds -- baseline}")
+      }
+      assert(spark.sql("SELECT count(*) FROM graftu.t").as[Long].head() === 0L)
+      stage(freshRoot())
+      spark.sql("""UPDATE graftu.t SET bal = 1
+                   WHERE id IN (SELECT id FROM graftu.t WHERE p = 2)""")
+      assert(spark.sql("SELECT count(*) FROM graftu.t WHERE bal = 1")
+        .as[Long].head() === 10L)
+      assert(storedRdds.subsetOf(baseline),
+        s"UPDATE left blocks behind: ${storedRdds -- baseline}")
+    } finally spark.conf.unset("spark.graft.dml.maxInlineSubqueryRows")
+  }
+
   test("DELETE pins its base version: a commit landing while subqueries " +
       "evaluate raises the retryable CME, never applies stale literals") {
     val root = freshRoot(); stage(root)

@@ -31,7 +31,7 @@ class TextRankSpec extends SparkTestBase {
     assert(got("a") === got("b"), "symmetric pair, symmetric rank")
   }
 
-  test("vocabulary ids come from the distributed dense rank: no " +
+  test("the token universe never funnels through one row: no " +
       "single-row array agg, no unpartitioned window in the plan") {
     val docs = Seq((1L, "p q r p"), (2L, "q r s t")).toDF("doc_id", "text")
     val df = TextRank.keywords(docs, "text", "doc_id", topK = 5)
@@ -44,7 +44,7 @@ class TextRankSpec extends SparkTestBase {
           if w.partitionSpec.isEmpty => w
     }
     assert(badWindows.isEmpty, s"unpartitioned window(s): $badWindows")
-    // parity with the sorted-distinct assignment the rank replaced
+    // every token with an edge is ranked
     val got = df.as[(String, Long)].collect().map(_._1).toSet
     assert(got === Set("p", "q", "r", "s", "t"))
   }
@@ -54,5 +54,42 @@ class TextRankSpec extends SparkTestBase {
     val a = TextRank.keywords(docs, "text", "doc_id").as[(String, Long)].collect().toSeq
     val b = TextRank.keywords(docs, "text", "doc_id").as[(String, Long)].collect().toSeq
     assert(a === b)
+  }
+
+  /** Plain-Scala TextRank: window co-occurrence multigraph, both
+    * directions, then the micro-quantized PageRank rounds by hand. */
+  private def model(texts: Seq[String], window: Int, iters: Int,
+      topK: Int): Seq[(String, Long)] = {
+    val toks = texts.filter(_ != null).map(_.trim.toLowerCase.split("\\s+", -1).toIndexedSeq)
+    val edges: Map[(String, String), Long] = (for {
+      t <- toks; i <- t.indices; o <- 1 to window if i + o < t.length
+      e <- Seq((t(i), t(i + o)), (t(i + o), t(i)))
+    } yield e).groupBy(identity).map { case (k, v) => (k, v.size.toLong) }
+    val nodes = edges.keySet.flatMap { case (a, b) => Set(a, b) }
+    val n = nodes.size
+    val deg = edges.toSeq.groupMapReduce(_._1._1)(_._2)(_ + _)
+    val teleport = math.round((1.0 - 0.85) * 1e6 / n)
+    var rank = nodes.map(_ -> math.round(1e6 / n)).toMap
+    for (_ <- 1 to iters) {
+      val sc = edges.toSeq.map { case ((a, b), w) =>
+        b -> math.round(rank(a).toDouble / deg(a)) * w }.groupMapReduce(_._1)(_._2)(_ + _)
+      rank = nodes.map(v => v -> (teleport + math.round(sc.getOrElse(v, 0L) * 0.85))).toMap
+    }
+    rank.toSeq.sortBy { case (t, r) => (-r, t) }.take(topK)
+  }
+
+  test("seeded corpus: keywords match a plain-Scala PageRank model") {
+    val rnd = new scala.util.Random(31)
+    val words = Vector("risk", "rate", "loan", "bank", "fed", "cut", "hike",
+      "yield", "bond", "debt", "a", "the")
+    val texts = Seq(null, "", "solo") ++ (0 until 60).map { _ =>
+      Seq.fill(2 + rnd.nextInt(20))(words(rnd.nextInt(words.length))).mkString(" ")
+    }
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    for ((window, iters, topK) <- Seq((2, 3, 20), (1, 2, 5), (3, 4, 8))) {
+      val got = TextRank.keywords(docs, "text", "doc_id", window, iters, topK)
+        .as[(String, Long)].collect().toSeq
+      assert(got === model(texts, window, iters, topK), s"window $window, iters $iters")
+    }
   }
 }
