@@ -1,57 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.json4s.{JArray, JBool, JDouble, JLong, JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 object Bench {
+  /** Exception class and the first line of its message. */
+  private def describe(e: Throwable): String =
+    Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .fold(e.getClass.getName)(m => s"${e.getClass.getName}: $m")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // 1-min loadavg BEFORE any work: median_load (sampled at trial starts
     // mid-run) includes the bench's OWN 32-thread load and floors around
     // ~3-4 even on an idle host — load_start is the one sample that can
     // prove the capture began on an idle box
-    val loadStart = try {
-      java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // native functions + the MERGE INTO resolution rule (cluster
-      // deployments set the same conf — docs/API.md)
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      // pure-JVM chmod on the local FS: no fork per written file
-      .config("spark.hadoop.fs.file.impl",
-        "graft.lake.NoForkLocalFileSystem")
-      // ...and its FileContext twin (streaming checkpoints resolve file://
-      // through fs.AbstractFileSystem.file.impl, not fs.file.impl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.lake.NoForkLocalFs")
-      // The default 100-entry whole-stage-codegen cache LRU-thrashes on a
-      // multi-hundred-query session (each query holds several codegen
-      // units), so every round-robin trial re-paid full janino compilation
-      // — measured 24% of a 10-query sweep's wall time. Sizing the cache
-      // to the workload's plan count makes min-of-N measure steady-state
-      // execution, not recompilation. 5000 is measured, not arbitrary: at
-      // 30000 the suite REGRESSED ~25% across unrelated queries (6× the
-      // live generated classes grinds GC/class-unloading and JIT code-
-      // cache churn), so bigger is not better — size to the live plan
-      // set. Same reasoning applies to any repeated-query deployment
-      // (dashboards, Thrift server).
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // shuffle/spill scratch on the fastest local storage: the sandbox's
-      // root FS serializes CONCURRENT file creates (~3 ms each with 32
-      // writers; thread dumps showed 21/32 task threads inside
-      // FileOutputStream.open0 during shuffle-write stages) — see
-      // graft.LocalScratch for the measurements and the 100 TB posture
-      // (env-overridable; a real node points this at its NVMe array)
-      .config("spark.local.dir", LocalScratch.dir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val loadStart = GraftSession.loadavg()
+    val spark = GraftSession.create()
     // Warm the JVM/codegen/parquet-reader paths and the OS page cache for
     // every input table once, so per-query timings reflect steady state
     // rather than first-query classloading and first-scan I/O.
-    try {
+    val warmupError = try {
       spark.range(1000).selectExpr("sum(id)").collect()
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings").foreach { t =>
@@ -88,7 +55,8 @@ object Bench {
         .outputMode("complete")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       wq.awaitTermination()
-    } catch { case _: Throwable => }
+      None
+    } catch { case e: Throwable => Some(describe(e)) }
     // Best-of-N per query (default 2): a single cold run conflates the
     // query's steady-state cost with first-hit codegen compilation and any
     // transient host contention; min-of-trials is the standard estimator
@@ -101,24 +69,11 @@ object Bench {
     // local iteration: SPARK_GRAFT_ONLY=q55_...,q52_... restricts the set
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
-    // Between queries: drop any CacheManager entries a query may have
-    // created and nudge the ContextCleaner (localCheckpoint blocks are
-    // freed on driver GC) so the scoreboard measures QUERIES, not the
-    // cumulative pinned-storage interference that tanked round 4 — 99
-    // queries × 2 trials of accumulated blocks squeezed execution memory
-    // until the whole suite GC-thrashed.
-    def resetSessionState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sharedState.cacheManager.clearCache()
-    }
-    // 1-minute loadavg at trial start: a contention-polluted capture is then
-    // self-diagnosing from the artifact alone (spikes correlate with load)
-    def loadavg(): Double = try {
-      java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
     val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(t => only.isEmpty || only(t._1))
+    // per-trial layer split (planning, jobs/stages/tasks, task time, shuffle,
+    // spill), read after each trial outside the timed region
+    val metrics = graft.obs.QueryMetrics.attach(spark)
     // Trials run ROUND-ROBIN across the whole suite (trial 1 of every query,
     // then trial 2, ...), not back-to-back per query: back-to-back trials
     // let ONE multi-minute host-contention window cover all N trials of the
@@ -126,12 +81,17 @@ object Bench {
     // the committed number (round 5's official artifact recorded 81 s for a
     // 1.4 s query this way). Interleaved, a contention window touches at
     // most one trial per query and the min discards it.
-    case class Trial(sec: Double, ok: Boolean, load: Double, ts: Long)
+    case class Trial(sec: Double, error: Option[String], load: Double, ts: Long,
+        layers: graft.obs.Layers) {
+      def ok: Boolean = error.isEmpty
+    }
     val samples = scala.collection.mutable.Map.empty[String, Vector[Trial]]
       .withDefaultValue(Vector.empty)
     for (t <- 1 to trials) {
       for ((name, fn) <- queryList) {
-        val load = loadavg()
+        // 1-minute loadavg at trial start: a contention-polluted capture is
+        // then self-diagnosing from the artifact alone
+        val load = GraftSession.loadavg()
         val ts = System.currentTimeMillis() / 1000
         val t0 = System.nanoTime()
         // noop sink, NOT count(): count() lets column pruning drop the
@@ -139,42 +99,46 @@ object Bench {
         // output expressions (HOF-heavy per-row math) benches as a bare
         // scan. The noop sink computes every output column and discards
         // the rows — the honest full-materialization cost.
-        val trial = try {
+        val error = try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Trial((System.nanoTime() - t0) / 1e9, ok = true, load, ts)
-        } catch { case _: Throwable =>
-          Trial((System.nanoTime() - t0) / 1e9, ok = false, load, ts)
-        }
-        samples(name) = samples(name) :+ trial
-        resetSessionState()
-        // GC at every query boundary (outside the timed region) nudges the
-        // ContextCleaner to reclaim the finished query's localCheckpoint
-        // blocks before the next query runs — without it a trial round
-        // re-creates round 4's cumulative pinned-storage interference.
-        System.gc()
+          None
+        } catch { case e: Throwable => Some(describe(e)) }
+        val sec = (System.nanoTime() - t0) / 1e9
+        samples(name) = samples(name) :+
+          Trial(sec, error, load, ts, metrics.snapshot(spark))
+        GraftSession.reset(spark)
       }
-      println(f"[round] trial $t/$trials done, load=${loadavg()}%.2f")
+      println(f"[round] trial $t/$trials done, load=${GraftSession.loadavg()}%.2f")
     }
-    val results = queryList.map { case (name, _) =>
-      // a throwing trial must NOT contribute a (fast) failure duration to
-      // the min — successful trials only; all-fail reports -1 as an explicit
-      // breakage marker in the JSON
-      val oks = samples(name).filter(_.ok).map(_.sec)
-      val best = if (oks.nonEmpty) oks.min else -1.0
-      println(f"[q] $name $best%.3fs")
-      name -> best
+    // a throwing trial must NOT contribute a (fast) failure duration to the
+    // min — successful trials only; all-fail reports -1 as an explicit
+    // breakage marker in the JSON
+    val best = queryList.map { case (name, _) =>
+      name -> samples(name).filter(_.ok).minByOption(_.sec)
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // per-trial detail (duration, success, 1-min loadavg, epoch sec) so a
-    // polluted capture is diagnosable from BENCH_local.json without a rerun
-    val trialsJson = queryList.map { case (name, _) =>
-      val arr = samples(name).map { tr =>
-        s"""{"sec":${math.rint(tr.sec * 1000) / 1000},"ok":${tr.ok},"load":${tr.load},"ts":${tr.ts}}"""
-      }.mkString("[", ",", "]")
-      s"\"" + name + "\":" + arr
-    }.mkString("{", ",", "}")
+    val results = best.map { case (name, b) =>
+      val sec = b.map(_.sec).getOrElse(-1.0)
+      println(f"[q] $name $sec%.3fs")
+      name -> sec
+    }
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    def r3(v: Double) = math.rint(v * 1000) / 1000
+    def secs(m: Seq[(String, Double)]) =
+      JObject(m.map { case (k, v) => k -> JDouble(v) }: _*)
+    // per-trial detail (duration, success or the failure's reason, 1-min
+    // loadavg, epoch sec) so a polluted or broken capture is diagnosable
+    // from BENCH_local.json without a rerun
+    val trialsJson = JObject(queryList.map { case (name, _) =>
+      name -> JArray(samples(name).toList.map { tr =>
+        JObject(List("sec" -> JDouble(r3(tr.sec)), "ok" -> JBool(tr.ok),
+          "load" -> JDouble(tr.load), "ts" -> JLong(tr.ts)) ++
+          tr.error.map(e => "error" -> JString(e)))
+      })
+    }: _*)
+    // the fastest successful trial's layer split, beside the time it explains
+    val layersJson = JObject(best.collect { case (name, Some(b)) =>
+      name -> b.layers.toJson
+    }: _*)
     // Full-precision per-query map goes to a FILE: the driver captures only
     // a ~2 KB tail of stdout, and a 91-query JSON line (~4 KB) gets its head
     // truncated there (round-3 BENCH parsed:null). Stdout gets a compact
@@ -187,13 +151,16 @@ object Bench {
     // once in warmup; queries measure the operators). File-only detail.
     val synth = try graft.queries.MediaFixtures.timingsFor(spark, sfDir)
       catch { case _: Throwable => Map.empty[String, Double] }
-    val synthJson = synth.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val full = JObject(List(
+      "metric" -> JString("total"), "value" -> JDouble(total),
+      "unit" -> JString("sec"), "queries" -> secs(results),
+      "trials" -> trialsJson, "layers" -> layersJson,
+      "media_synthesis_sec" -> secs(synth.toSeq.sortBy(_._1))) ++
+      warmupError.map(e => "warmup_error" -> JString(e)) :+
+      ("sf" -> JString(sfDir)))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"trials":$trialsJson,"media_synthesis_sec":$synthJson,"sf":"$sfDir"}""" + "\n")
-    def r3(v: Double) = math.rint(v * 1000) / 1000
-    val top = results.sortBy(-_._2).take(25)
-      .map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+      compact(render(full)) + "\n")
+    val top = results.sortBy(-_._2).take(25).map { case (k, v) => k -> r3(v) }
     // median 1-min loadavg across ALL trials, in the headline itself: the
     // committed number carries its own ambient-contention context (verdict
     // r6 ask #7 — no more cross-referencing BENCH_local.json to judge a
@@ -203,7 +170,12 @@ object Bench {
       if (allLoads.isEmpty) -1.0 else allLoads(allLoads.size / 2)
     // silence any trailing executor/stop chatter so this stays the tail
     spark.sparkContext.setLogLevel("ERROR")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"median_load":${r3(medianLoad)},"load_start":${r3(loadStart)},"queries":$top,"full":"$outFile","sf":"$sfDir"}""")
+    println(compact(render(JObject(
+      "metric" -> JString("total"), "value" -> JDouble(r3(total)),
+      "unit" -> JString("sec"), "n_queries" -> JLong(results.size),
+      "median_load" -> JDouble(r3(medianLoad)),
+      "load_start" -> JDouble(r3(loadStart)), "queries" -> secs(top),
+      "full" -> JString(outFile), "sf" -> JString(sfDir)))))
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan for selected queries
   * (or all) so pushdown, pruning, broadcast choice, and whole-stage codegen
   * spans can be inspected. Usage:
@@ -12,21 +10,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only: Set[String] =
       if (args.length > 1) args(1).split(",").toSet else Set.empty
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // session parity with Bench/Verify: SQL-surface queries stage via
-      // MERGE/UPDATE (extensions) and everything shares the no-fork FS +
-      // scratch-dir posture, so plans match what the bench executes
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl",
-        "graft.lake.NoForkLocalFileSystem")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.lake.NoForkLocalFs")
-      .config("spark.local.dir", LocalScratch.dir())
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only.contains(name)) {

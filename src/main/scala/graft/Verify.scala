@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,32 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Optional trailing args: run only the named queries (local iteration).
     val only = args.drop(2).toSet
-    // default to the box's cores (capped — beyond 16 threads the sf0.01
-    // correctness dump is scheduling-bound, not compute-bound)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      (Runtime.getRuntime.availableProcessors min 16).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // native functions + the MERGE INTO resolution rule (cluster
-      // deployments set the same conf — docs/API.md)
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      // pure-JVM chmod on the local FS: no fork per written file
-      .config("spark.hadoop.fs.file.impl",
-        "graft.lake.NoForkLocalFileSystem")
-      // ...and its FileContext twin (streaming checkpoints resolve file://
-      // through fs.AbstractFileSystem.file.impl, not fs.file.impl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.lake.NoForkLocalFs")
-      // multi-query session: size the codegen cache to the workload so
-      // repeated plans don't LRU-thrash janino recompilation (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // node-local scratch on the fastest local storage (see LocalScratch)
-      .config("spark.local.dir", LocalScratch.dir())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -54,28 +30,10 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same session-state hygiene as Bench: clear cache entries and nudge
-      // the ContextCleaner (localCheckpoint blocks free on driver GC) so a
-      // 100+-query dump doesn't accumulate storage pressure across queries
-      spark.catalog.clearCache()
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
+      GraftSession.reset(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val json = JObject(SparkEntry.oracleSql.toSeq.map { case (k, v) => k -> JString(v) }: _*)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), compact(render(json)))
     spark.stop()
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.lake.Lake
 import graft.master.SecurityMaster
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** CLI entry point mirroring the reference's three pipelines (§3.1 backfill,
   * §3.2 daily update, I5 consolidation) over the driver fixtures:
@@ -43,13 +45,7 @@ object Pipeline {
     val cmd = args(0)
     val sfDir = args(1)
     val root = args(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
 
     val t0 = System.nanoTime()
     val result: Map[String, Any] = cmd match {
@@ -87,9 +83,9 @@ object Pipeline {
       case other => Map("error" -> s"unknown command: $other")
     }
     val secs = (System.nanoTime() - t0) / 1e9
-    val kv = (result + ("cmd" -> cmd) + ("sec" -> f"$secs%.2f"))
-      .map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
-    println(kv)
+    val summary = (result.toSeq :+ ("cmd" -> cmd) :+ ("sec" -> f"$secs%.2f"))
+      .map { case (k, v) => k -> JString(v.toString) }
+    println(compact(render(JObject(summary: _*))))
     spark.stop()
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
+import org.json4s.{JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
 /** The storage substrate: entity-partitioned Parquet with idempotent
   * partition overwrite, compaction, manifests and listing (SURVEY §1.4,
@@ -103,7 +105,7 @@ object Lake {
       "table" -> table,
       "row_count" -> rowCount.toString,
       "version" -> version) ++ extra
-    val json = kv.map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
+    val json = compact(render(JObject(kv.toSeq.map { case (k, v) => k -> JString(v) }: _*)))
     val out = fs.create(new Path(s"$root/_manifests/$table.json"), true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
@@ -114,8 +116,10 @@ object Lake {
     if (!fs.exists(p)) return Map.empty
     val in = fs.open(p)
     val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    """"([^"]+)":\s*"([^"]*)"""".r.findAllMatchIn(json)
-      .map(m => m.group(1) -> m.group(2)).toMap
+    parse(json) match {
+      case JObject(fields) => fields.collect { case (k, JString(v)) => k -> v }.toMap
+      case other => throw new IllegalStateException(s"$p is not a JSON object: $other")
+    }
   }
 
   /** S14 — partition listing / existence probes (the reference's

@@ -437,12 +437,13 @@ object Snapshots {
   private def sidecarPath(root: String, table: String, version: Long) =
     s"${manifestDir(root, table)}/stats_v$version"
 
-  /** Atomically publish version N's file list. `create(overwrite = false)`
-    * is the optimistic-concurrency point (the Delta/Iceberg commit
-    * protocol's put-if-absent): two writers that both computed version N
-    * race on the SAME manifest path, exactly one create succeeds, and the
-    * loser surfaces a [[java.util.ConcurrentModificationException]] to
-    * retry against the new latest — at manifest granularity, never a
+  /** Atomically publish version N's file list. The bytes go to a hidden
+    * temp file, then [[publishArbiter]]`.putIfAbsent` moves them to
+    * `v<N>.json`: that put-if-absent is the optimistic-concurrency point
+    * (the Delta/Iceberg commit protocol). Two writers that both computed
+    * version N race on the SAME manifest path, exactly one publish wins,
+    * and the loser surfaces a [[java.util.ConcurrentModificationException]]
+    * to retry against the new latest — at manifest granularity, never a
     * silent lost update.
     *
     * Layout: `committedAtMillis`, the (escaped) `schema`, the `deletes`
@@ -450,13 +451,10 @@ object Snapshots {
     * `files` array LAST — readers use a real JSON parse, so the order is
     * convention, not a parsing contract.
     *
-    * Atomicity caveat: `create(overwrite=false)` is atomic on HDFS and
-    * local filesystems (the deployment contract). S3A implements it as a
-    * non-atomic check-then-create, so on a bare object store two racing
-    * writers can BOTH succeed — front the lake with a coordination layer
-    * (HDFS, a DynamoDB-style conditional put, or single-writer-per-table
-    * scheduling) before pointing `root` at `s3://`. The same caveat is
-    * documented beside the s3 example in docs/API.md.
+    * Atomicity: [[DefaultPublishArbiter]] uses link(2) on the local FS and
+    * rename on HDFS, both of which refuse an existing destination
+    * atomically. Object stores such as S3A have neither primitive; deploy
+    * [[CoordinatedPublishArbiter]] there (see docs/API.md).
     */
   private[graft] def writeManifest(f: FileSystem, root: String, table: String,
       version: Long, files: Seq[String],

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{JArray, JDouble, JLong, JNull, JObject, JString}
+import org.json4s.jackson.JsonMethods.{compact, render}
 
 /** Scale-stress harness: measures how the dedup / ANN / curation
   * headliners scale when the corpus grows 10× and 100×, producing the
@@ -208,41 +210,20 @@ object ScaleStress {
     // sampled BEFORE any work (even session startup): the artifact itself
     // carries the idleness evidence — `loads` inside each trial floor at
     // the run's own 32-thread work and cannot certify an idle box
-    val loadStart = try {
-      java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
+    val loadStart = graft.GraftSession.loadavg()
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,10,100")
       .split(",").map(_.trim.toInt).toSeq
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "2").toInt
     val q111Max = sys.env.getOrElse("SPARK_GRAFT_Q111_MAX", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.GraftSession.create()
     // shuffle width defaults to the core count; SPARK_GRAFT_SHUFFLE sizes
     // it to the DATA for the biggest blowup legs (the 100 TB guidance:
     // partitions must fit in executor memory at the target SF — AQE
     // coalesces a too-wide shuffle for free, it never splits a too-narrow
     // non-skewed one)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the SQL row-level verbs (dml_merge leg) ride the session extensions
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      // pure-JVM chmod on the local FS: no fork per written file
-      .config("spark.hadoop.fs.file.impl",
-        "graft.lake.NoForkLocalFileSystem")
-      // ...and its FileContext twin (streaming checkpoints resolve file://
-      // through fs.AbstractFileSystem.file.impl, not fs.file.impl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.lake.NoForkLocalFs")
-      // multi-query session: size the codegen cache to the workload so
-      // repeated plans don't LRU-thrash janino recompilation (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", graft.LocalScratch.dir())
-      .getOrCreate()
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 
@@ -266,16 +247,8 @@ object ScaleStress {
     }
     val registry = graft.SparkEntry.queries
 
-    def loadavg(): Double = try {
-      java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-    } catch { case _: Throwable => -1.0 }
-
-    def reset(): Unit = {
-      spark.catalog.clearCache()
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-    }
+    import graft.GraftSession.loadavg
+    def reset(): Unit = graft.GraftSession.reset(spark)
 
     // name -> scale -> (minSec, rows, loads)
     val results = scala.collection.mutable.LinkedHashMap
@@ -964,16 +937,19 @@ object ScaleStress {
     }
 
     def r3(v: Double) = math.rint(v * 1000) / 1000
-    val qJson = results.map { case (name, m) =>
+    val qJson = JObject(results.toSeq.map { case (name, m) =>
       val times = m.toSeq.sortBy(_._1).map { case (f, (t, rows, loads)) =>
-        s""""x$f":{"sec":${r3(t)},"rows":$rows,"loads":[${loads.map(r3).mkString(",")}]}"""
-      }.mkString(",")
+        s"x$f" -> JObject("sec" -> JDouble(r3(t)), "rows" -> JLong(rows),
+          "loads" -> JArray(loads.map(l => JDouble(r3(l))).toList))
+      }
       val e = exponent(m)
-      val eJson = if (e.isNaN) "null" else r3(e).toString
-      s""""$name":{$times,"exponent":$eJson}"""
-    }.mkString("{", ",", "}")
-    val out =
-      s"""{"metric":"scale_stress","sf_base":"$srcDir","load_start":${r3(loadStart)},"scales":[${scales.mkString(",")}],"trials":$trials,"queries":$qJson}"""
+      name -> JObject(times :+ ("exponent" -> (if (e.isNaN) JNull else JDouble(r3(e)))): _*)
+    }: _*)
+    val out = compact(render(JObject(
+      "metric" -> JString("scale_stress"), "sf_base" -> JString(srcDir),
+      "load_start" -> JDouble(r3(loadStart)),
+      "scales" -> JArray(scales.map(f => JLong(f)).toList),
+      "trials" -> JLong(trials), "queries" -> qJson)))
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "BENCH_scale_local.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), out + "\n")
     println(out)

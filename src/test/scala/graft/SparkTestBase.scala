@@ -12,30 +12,7 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the cluster deployment model (docs/API.md): native functions +
-      // the MERGE INTO resolution rule ride the session extensions
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      // pure-JVM chmod on the local FS (no fork per written file): kills
-      // both the per-file subprocess cost and the SIGKILLed-chmod flake
-      .config("spark.hadoop.fs.file.impl",
-        "graft.lake.NoForkLocalFileSystem")
-      // ...and its FileContext twin (streaming checkpoints resolve file://
-      // through fs.AbstractFileSystem.file.impl, not fs.file.impl)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.lake.NoForkLocalFs")
-      // multi-query session: size the codegen cache to the workload so
-      // repeated plans don't LRU-thrash janino recompilation (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.local.dir", graft.LocalScratch.dir())
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Built by the engine's own factory; four threads keep the suite's
+    * plans and timings independent of the host's core count. */
+  lazy val session: SparkSession = GraftSession.create(threads = 4)
 }

@@ -72,11 +72,15 @@ class LakeSpec extends SparkTestBase {
 
   test("manifest round-trip (S13)") {
     val root = tmpRoot()
+    // quotes, backslashes and control characters survive the round trip
+    val odd = "say \"hi\", C:\\lake\\\n\ttab"
     Lake.writeManifest(spark, root, "daily_ticks", 42L, "3",
-      Map("crsp_end_date" -> "2024-12-31"))
+      Map("crsp_end_date" -> "2024-12-31", "note" -> odd, "k\"ey" -> "v"))
     val m = Lake.readManifest(spark, root, "daily_ticks")
     assert(m("row_count") === "42")
     assert(m("crsp_end_date") === "2024-12-31")
+    assert(m("note") === odd)
+    assert(m("k\"ey") === "v")
     assert(Lake.readManifest(spark, root, "nope") === Map.empty)
   }
 

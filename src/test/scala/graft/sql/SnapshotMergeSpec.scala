@@ -413,7 +413,7 @@ private[sql] object MergeCmeTrigger {
       var err: Throwable = null
       val t = new Thread(() => {
         try {
-          val s = org.apache.spark.sql.SparkSession.builder().getOrCreate()
+          val s = org.apache.spark.sql.SparkSession.active
           graft.lake.Snapshots.append(
             s.range(1).selectExpr("CAST(99 AS BIGINT) AS id",
               "'concurrent' AS v", "CAST(1 AS INT) AS p"),

@@ -277,7 +277,7 @@ private[sql] object DeleteCmeTrigger {
       var err: Throwable = null
       val t = new Thread(() => {
         try {
-          val s = org.apache.spark.sql.SparkSession.builder().getOrCreate()
+          val s = org.apache.spark.sql.SparkSession.active
           graft.lake.Snapshots.append(
             s.range(1).selectExpr("CAST(99 AS BIGINT) AS id",
               "CAST(999 AS BIGINT) AS bal", "CAST(3 AS INT) AS p"),
