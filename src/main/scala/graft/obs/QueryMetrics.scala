@@ -102,6 +102,8 @@ final class QueryMetrics extends SparkListener with QueryExecutionListener {
     val deadline = System.nanoTime() + 20000000000L
     while (!(markerSeen && markerJobEnded) && System.nanoTime() < deadline)
       Thread.sleep(2)
+    if (!(markerSeen && markerJobEnded))
+      System.err.println("[obs] listener drain timed out: counts may be short")
   }
 
   /** Drain, return everything counted since the previous snapshot, and
