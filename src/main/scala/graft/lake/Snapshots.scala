@@ -64,51 +64,6 @@ object Snapshots {
   private[graft] def changesDir(root: String, table: String) = s"$root/$table/changes"
   private def manifestDir(root: String, table: String) = s"$root/_snapshots/$table"
 
-  /** One merge-on-read delete vector: `file` (relative to `deletes/`)
-    * holds the distinct matching values of `cols`; the vector applies to
-    * data files whose `addedAt` version is strictly below `version`.
-    */
-  private[graft] case class DeleteVector(file: String, cols: Seq[String], version: Long)
-
-  /** A parsed manifest. `addedAt` aligns index-wise with `files` (empty
-    * for pre-tracking manifests — every file then reads as addedAt 0,
-    * i.e. subject to every delete vector, the conservative direction).
-    * `operation` records the verb that produced the version (commit /
-    * append / replace / merge / update / delete / truncate / compact) and
-    * `partitionCols` the table's partition layout — both absent on
-    * pre-tracking manifests. `streamEpoch` is the `(queryId, epochId)`
-    * identity of a streaming-sink commit — the exactly-once ledger a
-    * replayed micro-batch epoch is deduplicated against (the Delta
-    * `txnAppId`/`txnVersion` idea, carried in the manifest itself).
-    * `epochs` is that ledger's HIGH-WATER index (queryId → highest
-    * committed epochId), carried forward monotonically by EVERY verb so
-    * [[epochVersion]]'s replay probe is O(1) against the latest manifest
-    * instead of a scan over the whole history.
-    * `changeFiles` is the version's CDC capture (paths relative to
-    * `changes/`): `Some(files)` when the committing verb wrote
-    * pre/post-image change rows (`_change_type` ∈ insert / delete /
-    * update_preimage / update_postimage), `Some(Nil)` when it captured and
-    * no row changed, `None` when the version carries no capture — the
-    * change feed then falls back to file-add attribution (and refuses
-    * rewrite-shaped versions, which adds alone cannot attribute).
-    */
-  private[graft] case class Manifest(
-      committedAtMillis: Option[Long],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      deletes: Seq[DeleteVector],
-      addedAt: Seq[Long],
-      files: Seq[String],
-      operation: Option[String] = None,
-      partitionCols: Seq[String] = Nil,
-      streamEpoch: Option[(String, Long)] = None,
-      epochs: Map[String, Long] = Map.empty,
-      changeFiles: Option[Seq[String]] = None,
-      droppedPhysical: Seq[String] = Nil) {
-    /** file → version it was added in (0 when untracked). */
-    def addedAtOf: Map[String, Long] =
-      files.zip(addedAt.padTo(files.length, 0L)).toMap
-  }
-
   private def listDataFiles(f: FileSystem, dir: String): Set[String] =
     listDataFilesWithAge(f, dir).map(_._1).toSet
 
@@ -138,6 +93,11 @@ object Snapshots {
     out.toSeq
   }
 
+  /** Data-write counter (test observability: the stage-once/reconcile-many
+    * retry contract pins ONE data write across N lost manifest races).
+    */
+  private[graft] val dataWrites = new java.util.concurrent.atomic.AtomicLong(0)
+
   /** Write `df`'s Hive-layout files through a hidden per-commit staging
     * directory, then move each file into `data/` and return the moved
     * relative paths with their exact byte lengths. Added-file attribution
@@ -149,11 +109,6 @@ object Snapshots {
     * per-file driver metadata ops (manifest-sized), cheap on HDFS/local
     * where rename is a pointer swap.
     */
-  /** Data-write counter (test observability: the stage-once/reconcile-many
-    * retry contract pins ONE data write across N lost manifest races).
-    */
-  private[graft] val dataWrites = new java.util.concurrent.atomic.AtomicLong(0)
-
   private def writeData(df: DataFrame, root: String, table: String,
       partitionCols: Seq[String]): Seq[(String, Long)] = {
     dataWrites.incrementAndGet()
@@ -177,6 +132,17 @@ object Snapshots {
     } finally f.delete(new Path(stage), true)
   }
 
+  /** Version N's manifest: `_snapshots/<table>/v<N>.json`. */
+  private def manifestPathOf(root: String, table: String, v: Long): Path =
+    new Path(s"${manifestDir(root, table)}/v$v.json")
+
+  /** [[manifestPathOf]]'s inverse on a directory entry's name; None for
+    * every other entry (stats sidecars, hidden temp files). */
+  private def versionOfName(name: String): Option[Long] =
+    if (name.startsWith("v") && name.endsWith(".json"))
+      name.stripPrefix("v").stripSuffix(".json").toLongOption
+    else None
+
   /** Latest version whose manifest was PUBLISHED at or before `tsMillis`
     * (wall-clock time travel — the catalog's `TIMESTAMP AS OF`). Commit
     * time is the `committedAtMillis` the manifest JSON itself carries
@@ -191,20 +157,11 @@ object Snapshots {
   def versionAsOf(spark: SparkSession, root: String, table: String,
       tsMillis: Long): Option[Long] = {
     val f = fs(spark, root)
-    val d = new Path(manifestDir(root, table))
-    if (!f.exists(d)) return None
-    val vs = f.listStatus(d).toSeq
-      .filter { s =>
-        val n = s.getPath.getName
-        n.startsWith("v") && n.endsWith(".json")
-      }
-      .map { s =>
-        val v = s.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong
-        val m = parsedManifestAt(f, s.getPath)
-        (v, m.committedAtMillis.getOrElse(s.getModificationTime))
-      }
-      .collect { case (v, t) if t <= tsMillis => v }
-    if (vs.isEmpty) None else Some(vs.max)
+    listVersions(f, root, table).filter { v =>
+      val p = manifestPathOf(root, table, v)
+      parsedManifestAt(f, p).committedAtMillis
+        .getOrElse(f.getFileStatus(p).getModificationTime) <= tsMillis
+    }.lastOption
   }
 
   private def readUtf8(f: FileSystem, p: Path): String = {
@@ -216,10 +173,7 @@ object Snapshots {
   private def listVersions(f: FileSystem, root: String, table: String): Seq[Long] = {
     val d = new Path(manifestDir(root, table))
     if (!f.exists(d)) return Seq.empty
-    f.listStatus(d).map(_.getPath.getName).toSeq
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong }
-      .sorted
+    f.listStatus(d).toSeq.flatMap(s => versionOfName(s.getPath.getName)).sorted
   }
 
   /** Last-known latest version per (root, table) — the O(1) fast path
@@ -234,9 +188,6 @@ object Snapshots {
     */
   private val latestHint =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
-
-  private def manifestPathOf(root: String, table: String, v: Long): Path =
-    new Path(s"${manifestDir(root, table)}/v$v.json")
 
   /** The table's latest live version. O(commits since last call) via the
     * forward-probing hint — the manifest-directory LISTING (O(history)
@@ -281,7 +232,7 @@ object Snapshots {
     val key = (p.toString, st.getModificationTime, st.getLen)
     val hit = manifestCache.get(key)
     if (hit != null) return hit
-    val m = parseManifest(readUtf8(f, p))
+    val m = Manifest.fromJson(readUtf8(f, p))
     if (manifestCache.size > 4096) manifestCache.clear()
     manifestCache.putIfAbsent(key, m)
     m
@@ -290,7 +241,7 @@ object Snapshots {
   private[graft] def manifest(spark: SparkSession, root: String, table: String,
       version: Long): Manifest = {
     val f = fs(spark, root)
-    val p = new Path(s"${manifestDir(root, table)}/v$version.json")
+    val p = manifestPathOf(root, table, version)
     if (!f.exists(p)) {
       // distinguish "never existed" from "vacuum retired it" — a reader
       // must see a clear error here, never a raw FileNotFound mid-scan
@@ -321,119 +272,6 @@ object Snapshots {
       version: Long): Option[org.apache.spark.sql.types.StructType] =
     manifest(spark, root, table, version).schema
 
-  // ---------------------------------------------------------------- JSON
-
-  /** Minimal JSON reader for the manifest's own format (objects, arrays,
-    * strings with escapes, integer numbers) — a real parse with an
-    * in-string state machine, so no field value (an escaped schema
-    * string, a column literally named "files") can alias a key the way a
-    * regex scan could. Numbers are parsed as Long (the manifest writes
-    * only integers).
-    */
-  private[graft] def parseManifest(json: String): Manifest = {
-    var i = 0
-    def ws(): Unit = while (i < json.length && json.charAt(i).isWhitespace) i += 1
-    def expect(c: Char): Unit = {
-      ws()
-      require(i < json.length && json.charAt(i) == c,
-        s"manifest parse: expected '$c' at $i")
-      i += 1
-    }
-    def str(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (json.charAt(i) != '"') {
-        if (json.charAt(i) == '\\') {
-          json.charAt(i + 1) match {
-            case 'n' => sb += '\n'; case 'r' => sb += '\r'; case 't' => sb += '\t'
-            case 'b' => sb += '\b'; case 'f' => sb += '\f'
-            case 'u' =>
-              sb += Integer.parseInt(json.substring(i + 2, i + 6), 16).toChar
-              i += 4
-            case c => sb += c
-          }
-          i += 2
-        } else { sb += json.charAt(i); i += 1 }
-      }
-      i += 1
-      sb.toString
-    }
-    def value(): Any = {
-      ws()
-      json.charAt(i) match {
-        case '"' => str()
-        case '[' =>
-          i += 1; ws()
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
-          if (json.charAt(i) == ']') { i += 1; return buf.toSeq }
-          var more = true
-          while (more) {
-            buf += value(); ws()
-            if (json.charAt(i) == ',') { i += 1 } else { expect(']'); more = false }
-          }
-          buf.toSeq
-        case '{' =>
-          i += 1; ws()
-          val m = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-          if (json.charAt(i) == '}') { i += 1; return m }
-          var more = true
-          while (more) {
-            ws(); val k = str(); expect(':'); m(k) = value(); ws()
-            if (json.charAt(i) == ',') { i += 1 } else { expect('}'); more = false }
-          }
-          m
-        case 't' => i += 4; true
-        case 'f' => i += 5; false
-        case 'n' => i += 4; null
-        case _ =>
-          val start = i
-          while (i < json.length && "+-0123456789.eE".indexOf(json.charAt(i)) >= 0) i += 1
-          json.substring(start, i).toLong
-      }
-    }
-    val top = value().asInstanceOf[scala.collection.Map[String, Any]]
-    val deletes = top.get("deletes").map(_.asInstanceOf[Seq[Any]]).getOrElse(Nil)
-      .map { e =>
-        val o = e.asInstanceOf[scala.collection.Map[String, Any]]
-        DeleteVector(o("file").asInstanceOf[String],
-          o("cols").asInstanceOf[Seq[Any]].map(_.asInstanceOf[String]),
-          o("v").asInstanceOf[Long])
-      }
-    Manifest(
-      top.get("committedAtMillis").map(_.asInstanceOf[Long]),
-      top.get("schema").map(s => org.apache.spark.sql.types.DataType
-        .fromJson(s.asInstanceOf[String])
-        .asInstanceOf[org.apache.spark.sql.types.StructType]),
-      deletes.toSeq,
-      top.get("addedAt").map(_.asInstanceOf[Seq[Any]].map(_.asInstanceOf[Long]))
-        .getOrElse(Nil),
-      top("files").asInstanceOf[Seq[Any]].map(_.asInstanceOf[String]),
-      top.get("operation").map(_.asInstanceOf[String]),
-      top.get("partitionCols").map(_.asInstanceOf[Seq[Any]]
-        .map(_.asInstanceOf[String])).getOrElse(Nil),
-      for {
-        q <- top.get("epochQuery").map(_.asInstanceOf[String])
-        e <- top.get("epochId").map(_.asInstanceOf[Long])
-      } yield (q, e),
-      top.get("epochs").map(_.asInstanceOf[scala.collection.Map[String, Any]]
-        .map { case (k, v) => k -> v.asInstanceOf[Long] }.toMap)
-        .getOrElse(Map.empty),
-      top.get("changeFiles").map(_.asInstanceOf[Seq[Any]]
-        .map(_.asInstanceOf[String])),
-      top.get("droppedPhysical").map(_.asInstanceOf[Seq[Any]]
-        .map(_.asInstanceOf[String])).getOrElse(Nil))
-  }
-
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def sidecarPath(root: String, table: String, version: Long) =
     s"${manifestDir(root, table)}/stats_v$version"
 
@@ -446,10 +284,10 @@ object Snapshots {
     * to retry against the new latest — at manifest granularity, never a
     * silent lost update.
     *
-    * Layout: `committedAtMillis`, the (escaped) `schema`, the `deletes`
-    * vectors, the `addedAt` array (index-aligned with `files`), then the
-    * `files` array LAST — readers use a real JSON parse, so the order is
-    * convention, not a parsing contract.
+    * Format: `m` stamped with `committedAtMillis` = now, encoded by
+    * [[Manifest.toJson]] — one compact JSON object through json4s, the
+    * only code that reads or writes manifest bytes ([[Manifest.fromJson]]
+    * is its reader).
     *
     * Atomicity: [[DefaultPublishArbiter]] uses link(2) on the local FS and
     * rename on HDFS, both of which refuse an existing destination
@@ -457,55 +295,9 @@ object Snapshots {
     * [[CoordinatedPublishArbiter]] there (see docs/API.md).
     */
   private[graft] def writeManifest(f: FileSystem, root: String, table: String,
-      version: Long, files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      deletes: Seq[DeleteVector] = Nil,
-      addedAt: Seq[Long] = Nil,
-      operation: Option[String] = None,
-      partitionCols: Seq[String] = Nil,
-      streamEpoch: Option[(String, Long)] = None,
-      epochs: Map[String, Long] = Map.empty,
-      changeFiles: Option[Seq[String]] = None,
-      droppedPhysical: Seq[String] = Nil): Unit = {
-    val schemaPart =
-      schema.map(s => s""""schema": "${jsonEscape(s.json)}", """).getOrElse("")
-    val opPart =
-      operation.map(o => s""""operation": "${jsonEscape(o)}", """).getOrElse("")
-    val epochPart = streamEpoch.map { case (q, e) =>
-      s""""epochQuery": "${jsonEscape(q)}", "epochId": $e, """ }.getOrElse("")
-    // deterministic key order (sorted) — manifests diff cleanly
-    val epochsPart =
-      if (epochs.isEmpty) ""
-      else epochs.toSeq.sortBy(_._1)
-        .map { case (q, e) => s""""${jsonEscape(q)}": $e""" }
-        .mkString("\"epochs\": {", ", ", "}, ")
-    val changePart = changeFiles.map(cf =>
-      cf.map(x => s""""${jsonEscape(x)}"""")
-        .mkString("\"changeFiles\": [", ", ", "], ")).getOrElse("")
-    val droppedPart =
-      if (droppedPhysical.isEmpty) ""
-      else droppedPhysical.map(x => s""""${jsonEscape(x)}"""")
-        .mkString("\"droppedPhysical\": [", ", ", "], ")
-    val partPart =
-      if (partitionCols.isEmpty) ""
-      else partitionCols.map(c => s""""${jsonEscape(c)}"""")
-        .mkString("\"partitionCols\": [", ", ", "], ")
-    val deletesPart =
-      if (deletes.isEmpty) ""
-      else deletes.map(d =>
-          s"""{"file": "${jsonEscape(d.file)}", "cols": [${d.cols.map(c =>
-            s""""${jsonEscape(c)}"""").mkString(", ")}], "v": ${d.version}}""")
-        .mkString("\"deletes\": [", ", ", "], ")
-    val addedPart =
-      if (addedAt.isEmpty) ""
-      else addedAt.mkString("\"addedAt\": [", ", ", "], ")
-    val json = files.map(x => s""""${jsonEscape(x)}"""").mkString(
-      s"""{"committedAtMillis": ${System.currentTimeMillis()}, """ +
-        opPart + epochPart + epochsPart + changePart + droppedPart +
-        partPart + schemaPart + deletesPart + addedPart +
-        """"files": [""",
-      ", ", "]}")
-    val p = new Path(s"${manifestDir(root, table)}/v$version.json")
+      version: Long, m: Manifest): Unit = {
+    val json = m.copy(committedAtMillis = Some(System.currentTimeMillis())).toJson
+    val p = manifestPathOf(root, table, version)
     // content atomicity: the bytes land in a hidden temp file first, then
     // the publish arbiter moves them into place atomically — a concurrent
     // reader can never observe an empty or half-written manifest
@@ -513,8 +305,8 @@ object Snapshots {
     // contention spec caught it). The publish is also the put-if-absent
     // point: the losing writer of a version race surfaces the retryable
     // CME, never a silent overwrite.
-    val tmp = new Path(s"${manifestDir(root, table)}/" +
-      s".v$version.json.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
+    val tmp = new Path(p.getParent,
+      s".${p.getName}.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
     val out = f.create(tmp, false)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
     val won =
@@ -622,17 +414,6 @@ object Snapshots {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Write the `stats_v<N>` sidecar: one row per LIVE file — fresh stats
-    * for added files, carried-forward
-    * stats for kept files (from the previous version's sidecar), null
-    * stats for files covered by neither (pruned reads open those
-    * conservatively). Every row records the file's exact byte length
-    * (write-derived) and — when the file's rows were counted at its own
-    * commit — its row count, so the catalog can report planner statistics
-    * and build file indexes with zero listing. With MOR delete vectors
-    * live, carried stats and counts OVERSTATE the readable rows — the
-    * conservative direction for both skipping and planning.
-    */
   /** The per-file stats of a commit's ADDED files, computed ONCE at stage
     * time and collected to driver rows (one row per added file —
     * manifest-sized): a reconcile retry after a lost race must be
@@ -676,6 +457,17 @@ object Snapshots {
     }
   }
 
+  /** Write the `stats_v<N>` sidecar: one row per LIVE file — fresh stats
+    * for added files, carried-forward
+    * stats for kept files (from the previous version's sidecar), null
+    * stats for files covered by neither (pruned reads open those
+    * conservatively). Every row records the file's exact byte length
+    * (write-derived) and — when the file's rows were counted at its own
+    * commit — its row count, so the catalog can report planner statistics
+    * and build file indexes with zero listing. With MOR delete vectors
+    * live, carried stats and counts OVERSTATE the readable rows — the
+    * conservative direction for both skipping and planning.
+    */
   private def writeSidecar(spark: SparkSession, root: String, table: String,
       version: Long, files: Seq[String],
       freshStats: Option[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])],
@@ -810,16 +602,38 @@ object Snapshots {
       throw new IllegalStateException(
         s"table $table already exists (latest version v$v)"))
     val f = fs(spark, root)
-    // partition columns LAST — the stored schema must equal the read
-    // schema byte for byte (file-source reads emit partition cols last)
-    val ordered = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(x => partitionCols.contains(x.name)) ++
-        partitionCols.flatMap(c => schema.fields.find(_.name == c)))
     f.mkdirs(new Path(dataDir(root, table)))
     beforePublish()
-    writeManifest(f, root, table, 1L, Seq.empty, Some(ordered),
-      operation = Some("create"), partitionCols = partitionCols)
+    writeManifest(f, root, table, 1L, Manifest(operation = Some("create"),
+      partitionCols = partitionCols).withSchema(schema))
     1L
+  }
+
+  /** The latest version, its manifest and its schema: the base of every
+    * schema-altering verb (`doing` names the verb in the refusal of a
+    * manifest that predates schema tracking).
+    */
+  private def latestWithSchema(spark: SparkSession, root: String,
+      table: String, doing: String)
+      : (Long, Manifest, org.apache.spark.sql.types.StructType) = {
+    val latest = latestVersion(spark, root, table).getOrElse(
+      throw new IllegalArgumentException(s"no snapshot of $table to alter"))
+    val prev = manifest(spark, root, table, latest)
+    (latest, prev, prev.schema.getOrElse(throw new IllegalStateException(
+      s"version $latest of $table predates schema tracking — commit once " +
+        s"through Snapshots before $doing")))
+  }
+
+  /** Publish `m` as METADATA-ONLY `version`: its live files are those of
+    * `statsFrom`, whose stats sidecar carries forward untouched (keyed
+    * physically; deleted rows only make its ranges conservatively wide). */
+  private def publishMetadata(spark: SparkSession, root: String, table: String,
+      version: Long, m: Manifest, statsFrom: Long): Long = {
+    beforePublish()
+    writeManifest(fs(spark, root), root, table, version, m)
+    writeSidecar(spark, root, table, version, m.files, None, m.files,
+      Some(statsFrom))
+    version
   }
 
   /** Publish a METADATA-ONLY version whose schema appends `newFields` —
@@ -837,12 +651,8 @@ object Snapshots {
   def evolveSchema(spark: SparkSession, root: String, table: String,
       newFields: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(newFields.nonEmpty, "evolveSchema: no fields to add")
-    val latest = latestVersion(spark, root, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot of $table to evolve"))
-    val prev = manifest(spark, root, table, latest)
-    val prevSchema = prev.schema.getOrElse(throw new IllegalStateException(
-      s"version $latest of $table predates schema tracking — commit once " +
-        "through Snapshots before evolving the schema explicitly"))
+    val (latest, prev, prevSchema) =
+      latestWithSchema(spark, root, table, "evolving the schema explicitly")
     val clash = newFields.map(_.name).filter(prevSchema.fieldNames.contains)
     require(clash.isEmpty,
       s"evolveSchema: column(s) ${clash.mkString(", ")} already exist")
@@ -850,25 +660,12 @@ object Snapshots {
     require(notNullable.isEmpty,
       s"evolveSchema: new column(s) ${notNullable.map(_.name).mkString(", ")} " +
         "must be nullable — existing rows have no value for them")
-    // partition columns stay LAST (the read-schema convention): new data
-    // columns slot in before them
-    val partSet = prev.partitionCols.toSet
-    val evolved = org.apache.spark.sql.types.StructType(
-      prevSchema.fields.filterNot(f => partSet.contains(f.name)) ++
-        newFields ++
-        prevSchema.fields.filter(f => partSet.contains(f.name)))
-    val version = latest + 1
-    beforePublish()
     newFields.foreach(f => checkPhysicalCollision(f.name, prevSchema,
       prev.droppedPhysical, table))
-    writeManifest(fs(spark, root), root, table, version, prev.files,
-      Some(evolved), prev.deletes, prev.addedAt.padTo(prev.files.length, 0L),
-      Some("evolve"), prev.partitionCols, epochs = prev.epochs,
-      droppedPhysical = prev.droppedPhysical)
-    // stats carry forward untouched (same files, same data)
-    writeSidecar(spark, root, table, version, prev.files, None,
-      prev.files, Some(latest))
-    version
+    // new data columns slot in before the partition columns
+    publishMetadata(spark, root, table, latest + 1, prev.next("evolve")
+      .withSchema(org.apache.spark.sql.types.StructType(
+        prevSchema.fields ++ newFields)), latest)
   }
 
   /** Rename a column — METADATA-ONLY, via logical→physical column
@@ -887,12 +684,8 @@ object Snapshots {
     */
   def renameColumn(spark: SparkSession, root: String, table: String,
       from: String, to: String): Long = {
-    val latest = latestVersion(spark, root, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot of $table to alter"))
-    val prev = manifest(spark, root, table, latest)
-    val prevSchema = prev.schema.getOrElse(throw new IllegalStateException(
-      s"version $latest of $table predates schema tracking — commit once " +
-        "through Snapshots before renaming columns"))
+    val (latest, prev, prevSchema) =
+      latestWithSchema(spark, root, table, "renaming columns")
     val field = prevSchema.fields.find(_.name == from).getOrElse(
       throw new IllegalArgumentException(
         s"renameColumn: no column $from in $table " +
@@ -909,16 +702,8 @@ object Snapshots {
           .copy(name = to)
       case f => f
     })
-    val version = latest + 1
-    beforePublish()
-    writeManifest(fs(spark, root), root, table, version, prev.files,
-      Some(renamed), prev.deletes, prev.addedAt.padTo(prev.files.length, 0L),
-      Some("rename-column"), prev.partitionCols, epochs = prev.epochs,
-      droppedPhysical = prev.droppedPhysical)
-    // stats carry forward untouched (sidecars are keyed physically)
-    writeSidecar(spark, root, table, version, prev.files, None,
-      prev.files, Some(latest))
-    version
+    publishMetadata(spark, root, table, latest + 1,
+      prev.next("rename-column").copy(schema = Some(renamed)), latest)
   }
 
   /** Drop a column — METADATA-ONLY: the new version's schema omits the
@@ -936,12 +721,8 @@ object Snapshots {
     */
   def dropColumn(spark: SparkSession, root: String, table: String,
       name: String): Long = {
-    val latest = latestVersion(spark, root, table).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot of $table to alter"))
-    val prev = manifest(spark, root, table, latest)
-    val prevSchema = prev.schema.getOrElse(throw new IllegalStateException(
-      s"version $latest of $table predates schema tracking — commit once " +
-        "through Snapshots before dropping columns"))
+    val (latest, prev, prevSchema) =
+      latestWithSchema(spark, root, table, "dropping columns")
     val field = prevSchema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"dropColumn: no column $name in $table"))
@@ -957,15 +738,9 @@ object Snapshots {
         "drop")
     val shrunk = org.apache.spark.sql.types.StructType(
       prevSchema.fields.filterNot(_.name == name))
-    val version = latest + 1
-    beforePublish()
-    writeManifest(fs(spark, root), root, table, version, prev.files,
-      Some(shrunk), prev.deletes, prev.addedAt.padTo(prev.files.length, 0L),
-      Some("drop-column"), prev.partitionCols, epochs = prev.epochs,
-      droppedPhysical = (prev.droppedPhysical :+ phys).distinct)
-    writeSidecar(spark, root, table, version, prev.files, None,
-      prev.files, Some(latest))
-    version
+    publishMetadata(spark, root, table, latest + 1,
+      prev.next("drop-column").copy(schema = Some(shrunk),
+        droppedPhysical = (prev.droppedPhysical :+ phys).distinct), latest)
   }
 
   /** Drop a versioned table: delete its manifests, sidecars, data and
@@ -1137,7 +912,6 @@ object Snapshots {
       explicitReplaced: Option[Seq[String]], operation: String,
       expectedBase: Option[Long],
       changeFiles: Option[Seq[String]] = None): Long = {
-    val f = fs(spark, root)
     val prevVersion = latestVersion(spark, root, table)
     expectedBase.foreach { e =>
       val now = prevVersion.getOrElse(0L)
@@ -1147,41 +921,47 @@ object Snapshots {
           "stale base; re-run the statement against the new version")
     }
     val prev = prevVersion.map(v => manifest(spark, root, table, v))
+      .getOrElse(Manifest())
     val replacedPrefixes: Seq[String] =
-      if (prev.isEmpty || !overwritePartitions || replaceAllFiles) Seq.empty
+      if (prevVersion.isEmpty || !overwritePartitions || replaceAllFiles) Seq.empty
       else explicitReplaced.getOrElse(staged.framePrefixes)
     val carried =
       if (replaceAllFiles) Seq.empty
-      else prev
-        .map(_.files.filterNot(file => replacedPrefixes.exists(file.startsWith)))
-        .getOrElse(Seq.empty)
-
-    val version = prevVersion.getOrElse(0L) + 1
-    val files = (carried ++ staged.added.map(_._1)).sorted
-    val carriedSet = carried.toSet
-    val prevAdded = prev.map(_.addedAtOf).getOrElse(Map.empty)
-    val addedAt = files.map(p =>
-      if (carriedSet(p)) prevAdded.getOrElse(p, 0L) else version)
+      else prev.files.filterNot(file => replacedPrefixes.exists(file.startsWith))
     // delete vectors carry forward: they still apply to the carried files
     // (addedAt < vector version) and, by the sequence rule, never to the
     // files this commit adds
-    val deletes =
-      if (replaceAllFiles) Seq.empty else prev.map(_.deletes).getOrElse(Nil)
-    // partition columns go LAST in the stored schema — that is the order
-    // every file-source read produces, so the manifest schema IS the read
-    // schema, byte for byte
-    val merged = mergedSchema(spark, root, table, prevVersion, staged.incomingSchema)
-    val schema = org.apache.spark.sql.types.StructType(
-      merged.fields.filterNot(x => partitionCols.contains(x.name)) ++
-        partitionCols.flatMap(c => merged.fields.find(_.name == c)))
+    publishFiles(spark, root, table, prevVersion,
+      prev.next(operation).copy(partitionCols = partitionCols,
+        deletes = if (replaceAllFiles) Nil else prev.deletes,
+        changeFiles = changeFiles),
+      carried, staged.added.map(_._1), staged.incomingSchema, staged.freshStats)
+  }
+
+  /** Publish the version a data commit lands on top of `prevVersion`:
+    * `base` is the previous manifest advanced by [[Manifest.next]] with
+    * the caller's per-version fields set; its files become the `carried`
+    * ones, which keep their addedAt, plus the `added` ones, attributed to
+    * the new version. The schema merges `incoming` into the previous
+    * version's, which `base` still carries ([[mergedSchema]]).
+    * Driver-sized metadata only.
+    */
+  private def publishFiles(spark: SparkSession, root: String, table: String,
+      prevVersion: Option[Long], base: Manifest, carried: Seq[String],
+      added: Seq[String], incoming: org.apache.spark.sql.types.StructType,
+      freshStats: Option[(org.apache.spark.sql.types.StructType,
+        Seq[org.apache.spark.sql.Row])]): Long = {
+    val version = prevVersion.getOrElse(0L) + 1
+    val files = (carried ++ added).sorted
+    val carriedSet = carried.toSet
+    val prevAdded = base.addedAtOf
+    val m = base.copy(files = files, addedAt = files.map(p =>
+      if (carriedSet(p)) prevAdded.getOrElse(p, 0L) else version))
+      .withSchema(mergedSchema(spark, root, table, prevVersion, base, incoming))
     beforePublish()
-    writeManifest(f, root, table, version, files, Some(schema), deletes,
-      addedAt, Some(operation), partitionCols,
-      epochs = prev.map(_.epochs).getOrElse(Map.empty),
-      changeFiles = changeFiles,
-      droppedPhysical = prev.map(_.droppedPhysical).getOrElse(Nil))
-    writeSidecar(spark, root, table, version, files, staged.freshStats,
-      carried, prevVersion)
+    writeManifest(fs(spark, root), root, table, version, m)
+    writeSidecar(spark, root, table, version, files, freshStats, carried,
+      prevVersion)
     version
   }
 
@@ -1346,17 +1126,8 @@ object Snapshots {
       } finally f.delete(new Path(stage), true)
     if (!moved) return latest
     val version = latest + 1
-    beforePublish()
-    writeManifest(f, root, table, version, prev.files, prev.schema,
-      prev.deletes :+ DeleteVector(rel, vecCols, version),
-      prev.addedAt.padTo(prev.files.length, 0L),
-      Some("delete"), prev.partitionCols, epochs = prev.epochs,
-      droppedPhysical = prev.droppedPhysical)
-    // stats carry forward untouched: deleted rows can only make the
-    // ranges WIDER than reality — conservative for skipping and planning
-    writeSidecar(spark, root, table, version, prev.files, None,
-      prev.files, Some(latest))
-    version
+    publishMetadata(spark, root, table, version, prev.next("delete").copy(
+      deletes = prev.deletes :+ DeleteVector(rel, vecCols, version)), latest)
   }
 
   /** Truncate: publish a version with NO live files (and no vectors). The
@@ -1372,21 +1143,12 @@ object Snapshots {
     val prev = manifest(spark, root, table, latest)
     val schema = prev.schema.orElse(
       scala.util.Try(readVersion(spark, root, table, latest).schema).toOption)
-    val partCols =
-      if (prev.partitionCols.nonEmpty) prev.partitionCols
-      else prev.files.headOption.toSeq
-        .flatMap(_.split('/').dropRight(1).map(_.takeWhile(_ != '=')))
-    val version = latest + 1
-    beforePublish()
-    writeManifest(fs(spark, root), root, table, version, Seq.empty, schema,
-      operation = Some("truncate"), partitionCols = partCols,
-      epochs = prev.epochs, droppedPhysical = prev.droppedPhysical)
-    // carry the stats-sidecar SCHEMA forward (zero rows — no live files):
-    // the write shape of the reborn table derives its tracked statsCols
-    // from the latest sidecar, so skipping continuity survives a truncate
-    writeSidecar(spark, root, table, version, Seq.empty, None,
-      Seq.empty, Some(latest))
-    version
+    // the stats sidecar carries its SCHEMA forward (zero rows — no live
+    // files): the write shape of the reborn table derives its tracked
+    // statsCols from the latest sidecar, so skipping survives a truncate
+    publishMetadata(spark, root, table, latest + 1,
+      prev.next("truncate").copy(files = Nil, addedAt = Nil, deletes = Nil,
+        schema = schema, partitionCols = prev.partitionLayout), latest)
   }
 
   /** Is `to` a lossless widening of `from` that Spark 4's parquet readers
@@ -1437,10 +1199,10 @@ object Snapshots {
     * (partial-column appends): its files simply read null there.
     */
   private def mergedSchema(spark: SparkSession, root: String, table: String,
-      prevVersion: Option[Long],
+      prevVersion: Option[Long], prevManifest: Manifest,
       incoming: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = {
-    prevVersion.flatMap(v => versionSchema(spark, root, table, v)) match {
+    prevManifest.schema match {
       case Some(prev) =>
         incoming.fields.foreach { fl =>
           prev.fields.find(_.name == fl.name).foreach { pf =>
@@ -1462,13 +1224,8 @@ object Snapshots {
           }
         }
         val fresh = incoming.fields.filterNot(f => prevNames(f.name))
-        if (fresh.nonEmpty) {
-          val dropped = prevVersion
-            .map(v => manifest(spark, root, table, v).droppedPhysical)
-            .getOrElse(Nil)
-          fresh.foreach(f =>
-            checkPhysicalCollision(f.name, prev, dropped, table))
-        }
+        fresh.foreach(f => checkPhysicalCollision(f.name, prev,
+          prevManifest.droppedPhysical, table))
         org.apache.spark.sql.types.StructType(widened ++ fresh)
       case None if prevVersion.nonEmpty =>
         // migration edge: the previous manifest predates schema tracking.
@@ -1535,8 +1292,7 @@ object Snapshots {
     // the hot path (a NEW epoch) reads ONE manifest: the latest (found by
     // the forward-probing hint, no listing) and its high-water index
     val last = latestVersion(spark, root, table).getOrElse(return None)
-    def m(v: Long) =
-      parsedManifestAt(f, new Path(s"${manifestDir(root, table)}/v$v.json"))
+    def m(v: Long) = parsedManifestAt(f, manifestPathOf(root, table, v))
     m(last).epochs.get(queryId) match {
       case Some(hw) if epochId > hw => None // never committed — O(1)
       case _ =>
@@ -1592,36 +1348,20 @@ object Snapshots {
     lazy val freshStats = stageFreshStats(spark, root, table, added, statsCols)
     retryLoop({
       epochVersion(spark, root, table, queryId, epochId).getOrElse {
-        val f = fs(spark, root)
         val prevVersion = latestVersion(spark, root, table)
         val prev = prevVersion.map(v => manifest(spark, root, table, v))
-        val carried = prev.map(_.files).getOrElse(Seq.empty)
-        val version = prevVersion.getOrElse(0L) + 1
-        val files = (carried ++ added.map(_._1)).sorted
-        val carriedSet = carried.toSet
-        val prevAdded = prev.map(_.addedAtOf).getOrElse(Map.empty)
-        val addedAt = files.map(p =>
-          if (carriedSet(p)) prevAdded.getOrElse(p, 0L) else version)
-        val deletes = prev.map(_.deletes).getOrElse(Nil)
-        val merged = mergedSchema(spark, root, table, prevVersion, incomingSchema)
-        val parts =
-          if (partitionCols.nonEmpty) partitionCols
-          else prev.map(_.partitionCols).getOrElse(Nil)
-        val schema = org.apache.spark.sql.types.StructType(
-          merged.fields.filterNot(x => parts.contains(x.name)) ++
-            parts.flatMap(c => merged.fields.find(_.name == c)))
+          .getOrElse(Manifest())
         // merge this epoch into the high-water index (monotone: a late
         // replay must never regress a newer epoch's entry)
-        val hw = prev.map(_.epochs).getOrElse(Map.empty)
-        val epochs = hw + (queryId ->
-          math.max(epochId, hw.getOrElse(queryId, Long.MinValue)))
-        beforePublish()
-        writeManifest(f, root, table, version, files, Some(schema), deletes,
-          addedAt, Some("stream"), parts, Some((queryId, epochId)), epochs,
-          droppedPhysical = prev.map(_.droppedPhysical).getOrElse(Nil))
-        writeSidecar(spark, root, table, version, files, freshStats,
-          carried, prevVersion)
-        version
+        val hw = prev.epochs
+        publishFiles(spark, root, table, prevVersion,
+          prev.next("stream").copy(
+            partitionCols =
+              if (partitionCols.nonEmpty) partitionCols else prev.partitionCols,
+            streamEpoch = Some((queryId, epochId)),
+            epochs = hw + (queryId ->
+              math.max(epochId, hw.getOrElse(queryId, Long.MinValue)))),
+          prev.files, added.map(_._1), incomingSchema, freshStats)
       }
     }, maxRetries, _ => ())
   }
@@ -1696,10 +1436,11 @@ object Snapshots {
     // the new version carries no column mapping and no retired physical
     // names (droppedPhysical resets) — compact is the verb that clears a
     // mapped table's translation debt
-    writeManifest(f, root, table, version, files,
-      Some(ColumnMapping.unmapped(full.schema)),
-      Nil, files.map(_ => version), Some("compact"), partitionCols,
-      epochs = manifest(spark, root, table, latest).epochs)
+    writeManifest(f, root, table, version,
+      manifest(spark, root, table, latest).next("compact").copy(
+        files = files, addedAt = files.map(_ => version), deletes = Nil,
+        schema = Some(ColumnMapping.unmapped(full.schema)),
+        partitionCols = partitionCols, droppedPhysical = Nil))
     writeSidecar(spark, root, table, version, files,
       stageFreshStats(spark, root, table, added, statsCols), Seq.empty, None)
     version
@@ -1957,7 +1698,7 @@ object Snapshots {
       table: String): Seq[(Long, Long, Option[String], Long, Long, Long)] = {
     val f = fs(spark, root)
     listVersions(f, root, table).map { v =>
-      val p = new Path(s"${manifestDir(root, table)}/v$v.json")
+      val p = manifestPathOf(root, table, v)
       val m = parsedManifestAt(f, p)
       val committedAt = m.committedAtMillis
         .getOrElse(f.getFileStatus(p).getModificationTime)
@@ -2036,19 +1777,12 @@ object Snapshots {
     require(toVersion <= latest,
       s"restore: version $toVersion of $table does not exist (latest: v$latest)")
     val m = manifest(spark, root, table, toVersion) // loud vacuum error here
-    val version = latest + 1
-    beforePublish()
     // the epoch high-water index carries from the LATEST manifest, not the
     // restore target: the exactly-once ledger is monotone — an epoch
     // committed between toVersion and latest must never re-commit after a
     // rollback (its manifest stays live; the fast probe must agree)
-    writeManifest(fs(spark, root), root, table, version, m.files, m.schema,
-      m.deletes, m.addedAt.padTo(m.files.length, 0L), Some("restore"),
-      m.partitionCols, epochs = manifest(spark, root, table, latest).epochs,
-      droppedPhysical = m.droppedPhysical)
-    writeSidecar(spark, root, table, version, m.files, None, m.files,
-      Some(toVersion))
-    version
+    publishMetadata(spark, root, table, latest + 1, m.next("restore").copy(
+      epochs = manifest(spark, root, table, latest).epochs), toVersion)
   }
 
   /** Drop data files and delete-vector files referenced by NO version >
@@ -2092,7 +1826,7 @@ object Snapshots {
       .collect { case (p, t) if !keptChanges(p) && t < cutoff => p }.sorted
     deadChanges.foreach(p => f.delete(new Path(s"$cdir/$p"), false))
     (1L until keepFrom).foreach { v =>
-      f.delete(new Path(s"${manifestDir(root, table)}/v$v.json"), false)
+      f.delete(manifestPathOf(root, table, v), false)
       f.delete(new Path(sidecarPath(root, table, v)), true)
     }
     // crashed writers leak HIDDEN staging dirs (`.stage-*` from batch

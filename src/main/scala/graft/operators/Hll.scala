@@ -34,10 +34,12 @@ object Hll {
     conv(substring(md5(v.cast("string").cast("binary")), 1, 15), 16, 10)
       .cast("long")
 
-  /** rho = leading-zero count in the W-bit window + 1 ∈ [1, W+1]. */
+  /** rho = leading-zero count in the W-bit window + 1 ∈ [1, W+1]. `bin`
+    * is `Long.toBinaryString`, which has no leading zeros, so its length
+    * is the window's significant-bit count (w = 0 is the `when` arm). */
   private def rho(w: Column): Column =
     when(w === 0, lit(W + 1))
-      .otherwise(lit(W + 1) - length(ltrim(bin(w), "0")))
+      .otherwise(lit(W + 1) - length(bin(w)))
 
   /** Per-group register array (length 64, element = max rho seen, 0 =
     * empty register). One partially-aggregated groupBy on (group, j), then

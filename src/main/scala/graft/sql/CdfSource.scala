@@ -91,7 +91,7 @@ object CdfSource {
     val sch = m.schema.getOrElse(throw new IllegalStateException(
       s"$table@v$latest has no manifest schema — the CDF stream needs " +
         "schema tracking (recommit through graft.lake.Snapshots)"))
-    val partCols = partColsOf(m).toSet
+    val partCols = m.partitionLayout.toSet
     StructType(sch.fields.map { f =>
       if (partCols.contains(f.name) && (f.dataType == IntegerType ||
           f.dataType == ShortType || f.dataType == ByteType))
@@ -99,11 +99,6 @@ object CdfSource {
       else f
     })
   }
-
-  private[sql] def partColsOf(m: Snapshots.Manifest): Seq[String] =
-    if (m.partitionCols.nonEmpty) m.partitionCols
-    else m.files.headOption.toSeq
-      .flatMap(_.split('/').dropRight(1).map(_.takeWhile(_ != '=')))
 
   private[sql] def changeSchema(data: StructType): StructType =
     // data fields are NULLABLE regardless of the table's contract: a

@@ -55,7 +55,7 @@ object MorRead {
     * collect the internal-value tuples.
     */
   def resolve(spark: SparkSession, deletesDir: String,
-      deletes: Seq[graft.lake.Snapshots.DeleteVector],
+      deletes: Seq[graft.lake.DeleteVector],
       addedAt: Map[String, Long], tableSchema: StructType): Spec = {
     val vectors = deletes.map { d =>
       val df = spark.read.parquet(s"$deletesDir/${d.file}")

@@ -159,7 +159,8 @@ class SnapshotsSpec extends SparkTestBase {
     // the competing writer lands its v2 manifest between OUR version
     // computation and publish — the deterministic replay of the race
     Snapshots.beforePublish = () =>
-      Snapshots.writeManifest(f, root, "t", 2L, Seq("winner.parquet"))
+      Snapshots.writeManifest(f, root, "t", 2L,
+        Manifest(files = Seq("winner.parquet")))
     try {
       intercept[java.util.ConcurrentModificationException] {
         Snapshots.commit(Seq((2L, 2020)).toDF("id", "year"), root, "t", Seq("year"))
@@ -179,7 +180,7 @@ class SnapshotsSpec extends SparkTestBase {
     // can't shrink to empty), and a FIRST commit of an empty frame
     val f = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    Snapshots.writeManifest(f, root, "t", 2L, Seq.empty)
+    Snapshots.writeManifest(f, root, "t", 2L, Manifest(files = Seq.empty))
     assert(Snapshots.liveFiles(spark, root, "t", 2L).isEmpty)
     val read = Snapshots.readVersion(spark, root, "t", 2L)
     assert(read.columns.toSeq === Seq("id", "v", "year"))
@@ -244,8 +245,8 @@ class SnapshotsSpec extends SparkTestBase {
     Snapshots.beforePublish = () =>
       if (!fired) {
         fired = true
-        Snapshots.writeManifest(f, root, "t", 2L,
-          Snapshots.liveFiles(spark, root, "t", 1L)) // winner carries v1
+        Snapshots.writeManifest(f, root, "t", 2L, // winner carries v1
+          Manifest(files = Snapshots.liveFiles(spark, root, "t", 1L)))
       }
     try {
       val v = Snapshots.commitRetry(Seq((2L, 2021)).toDF("id", "year"),
@@ -268,7 +269,7 @@ class SnapshotsSpec extends SparkTestBase {
       spark.sparkContext.hadoopConfiguration)
     val files = Snapshots.liveFiles(spark, root, "t", 1L)
     f.delete(new org.apache.hadoop.fs.Path(s"$root/_snapshots/t/v1.json"), false)
-    Snapshots.writeManifest(f, root, "t", 1L, files) // no schema param
+    Snapshots.writeManifest(f, root, "t", 1L, Manifest(files = files)) // no schema param
     assert(Snapshots.versionSchema(spark, root, "t", 1L).isEmpty)
     // first post-upgrade commit: v2's stamped schema must still carry
     // old_col, and v1's rows keep their value under the merged read
@@ -513,7 +514,7 @@ class SnapshotsSpec extends SparkTestBase {
         competing += 1
         val next = Snapshots.latestVersion(spark, root, "t").get + 1
         Snapshots.writeManifest(f, root, "t", next,
-          Snapshots.liveFiles(spark, root, "t", next - 1))
+          Manifest(files = Snapshots.liveFiles(spark, root, "t", next - 1)))
       }
     val writesBefore = Snapshots.dataWrites.get()
     try {
@@ -546,8 +547,8 @@ class SnapshotsSpec extends SparkTestBase {
     // two writers publish the SAME version through the default arbiter:
     // both "succeed" — the second silently replaces the first (this is
     // exactly what a bare object store would do)
-    Snapshots.writeManifest(s3ish, root, "t", 1L, Seq("first"))
-    Snapshots.writeManifest(s3ish, root, "t", 1L, Seq("second"))
+    Snapshots.writeManifest(s3ish, root, "t", 1L, Manifest(files = Seq("first")))
+    Snapshots.writeManifest(s3ish, root, "t", 1L, Manifest(files = Seq("second")))
     assert(Snapshots.liveFiles(spark, root, "t", 1L) === Seq("second"),
       "demonstrated: the default arbiter cannot protect a non-atomic FS")
     // same race through the coordinated arbiter (put-if-absent lock on a
@@ -556,9 +557,9 @@ class SnapshotsSpec extends SparkTestBase {
     val lockDir = java.nio.file.Files.createTempDirectory("snap_locks").toString
     Snapshots.publishArbiter = new Snapshots.CoordinatedPublishArbiter(lockDir, conf)
     try {
-      Snapshots.writeManifest(s3ish, root, "t", 2L, Seq("winner"))
+      Snapshots.writeManifest(s3ish, root, "t", 2L, Manifest(files = Seq("winner")))
       val lost = intercept[java.util.ConcurrentModificationException] {
-        Snapshots.writeManifest(s3ish, root, "t", 2L, Seq("loser"))
+        Snapshots.writeManifest(s3ish, root, "t", 2L, Manifest(files = Seq("loser")))
       }
       assert(lost.getMessage.contains("committed concurrently"))
       assert(Snapshots.liveFiles(spark, root, "t", 2L) === Seq("winner"))

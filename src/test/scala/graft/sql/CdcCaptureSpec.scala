@@ -230,4 +230,51 @@ class CdcCaptureSpec extends SparkTestBase {
       assert(skipped === Set(9L))
     } finally spark.conf.unset("spark.graft.changes.skipChangeCommits")
   }
+
+  test("metadata-only verbs after a stream epoch and a captured UPDATE " +
+      "carry the epoch ledger, never the epoch identity or the capture") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val root = freshRoot()
+    Snapshots.commit((0L until 6L).map(i => (i, i * 10L)).toDF("id", "bal"),
+      root, "t", Seq.empty) // v1
+    def epoch(id: Long): Long = {
+      val stage = s"$root/t/.streamstage-qc/0"
+      Seq((id, id * 10L)).toDF("id", "bal").coalesce(1)
+        .write.mode("overwrite").parquet(stage)
+      val rel = new java.io.File(stage).listFiles()
+        .map(_.getName).filter(_.endsWith(".parquet")).head
+      val added = Snapshots.adoptStagedFiles(spark, root, "t", stage, Seq(rel))
+      Snapshots.commitStreamEpoch(spark, root, "t", added,
+        StructType(Seq(StructField("id", LongType), StructField("bal", LongType))),
+        Seq.empty, Seq.empty, "qc", 0L)
+    }
+    val vStream = epoch(100L)
+    val vEvolve1 = Snapshots.evolveSchema(spark, root, "t",
+      Seq(StructField("note1", StringType)))
+    val vRestore1 = Snapshots.restore(spark, root, "t", vStream)
+    GraftCatalog.install(spark, "graftcarry", root)
+    withCapture {
+      spark.sql("UPDATE graftcarry.t SET bal = bal + 1 WHERE id < 2")
+    }
+    val vUpdate = vRestore1 + 1
+    assert(Snapshots.manifest(spark, root, "t", vUpdate).changeFiles
+      .exists(_.nonEmpty))
+    val vEvolve2 = Snapshots.evolveSchema(spark, root, "t",
+      Seq(StructField("note2", StringType)))
+    val vRestore2 = Snapshots.restore(spark, root, "t", vUpdate)
+
+    Seq(vEvolve1, vRestore1, vEvolve2, vRestore2).foreach { v =>
+      val m = Snapshots.manifest(spark, root, "t", v)
+      assert(m.epochs === Map("qc" -> 0L), s"v$v dropped the epoch ledger")
+      assert(m.streamEpoch.isEmpty, s"v$v carried the epoch identity")
+      assert(m.changeFiles.isEmpty, s"v$v carried the CDC capture")
+    }
+    // the ledger still answers the stream version; a replay appends nothing
+    assert(Snapshots.epochVersion(spark, root, "t", "qc", 0L) === Some(vStream))
+    assert(epoch(999L) === vStream)
+    assert(Snapshots.latestVersion(spark, root, "t") === Some(vRestore2))
+    // the change feed shows nothing at the metadata-only versions
+    assert(batchChanges("graftcarry", "t", vEvolve1, vRestore1).count() === 0L)
+    assert(batchChanges("graftcarry", "t", vEvolve2, vRestore2).count() === 0L)
+  }
 }

@@ -311,16 +311,17 @@ class GraftCatalogSpec extends SparkTestBase {
 
   test("concurrent commits cannot silently lose an update (manifest put-if-absent)") {
     // the race: two writers read latest = 1, both publish v2. The commit
-    // protocol's atomic point is writeManifest's create(overwrite=false) —
-    // exactly one create succeeds, the loser gets a retryable CME (a
-    // second overwrite=true create would silently drop the winner's files)
+    // protocol's atomic point is writeManifest's publishArbiter.putIfAbsent
+    // (link(2) on the local FS) — exactly one publish succeeds, the loser
+    // gets a retryable CME (a replacing publish would silently drop the
+    // winner's files)
     val root = java.nio.file.Files.createTempDirectory("graft_cat_occ").toString
-    import graft.lake.Snapshots
+    import graft.lake.{Manifest, Snapshots}
     Snapshots.commit(Seq((1L, 2020)).toDF("id", "year"), root, "t", Seq("year"))
     val f = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-    Snapshots.writeManifest(f, root, "t", 2L, Seq("a.parquet")) // winner
+    Snapshots.writeManifest(f, root, "t", 2L, Manifest(files = Seq("a.parquet"))) // winner
     intercept[java.util.ConcurrentModificationException] {
-      Snapshots.writeManifest(f, root, "t", 2L, Seq("b.parquet")) // loser
+      Snapshots.writeManifest(f, root, "t", 2L, Manifest(files = Seq("b.parquet"))) // loser
     }
     // a fresh read still sees the winner's list
     assert(Snapshots.latestVersion(spark, root, "t").contains(2L))
