@@ -27,7 +27,7 @@ import java.nio.charset.StandardCharsets
   * stats for the files it ADDS (from the files actually written, via
   * `_metadata` — never trusted from the writer's plan), carries forward
   * the stats of files it keeps, and writes the combined table as a
-  * stats sidecar (`stats_v<N>` parquet, one row per live file) beside
+  * stats sidecar ([[Sidecar]]: parquet, one row per live file) beside
   * the file-list manifest. Every sidecar row also records the file's
   * exact LENGTH and ROW COUNT, so the SQL catalog can report precise
   * statistics to the planner and build its file index with zero data-file
@@ -62,7 +62,7 @@ object Snapshots {
   private def dataDir(root: String, table: String) = s"$root/$table/data"
   private def deletesDir(root: String, table: String) = s"$root/$table/deletes"
   private[graft] def changesDir(root: String, table: String) = s"$root/$table/changes"
-  private def manifestDir(root: String, table: String) = s"$root/_snapshots/$table"
+  private[lake] def manifestDir(root: String, table: String) = s"$root/_snapshots/$table"
 
   private def listDataFiles(f: FileSystem, dir: String): Set[String] =
     listDataFilesWithAge(f, dir).map(_._1).toSet
@@ -117,18 +117,8 @@ object Snapshots {
     val stage = s"$root/$table/.stage-${java.util.UUID.randomUUID().toString.take(12)}"
     try {
       df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(stage)
-      val staged = listDataFilesWithAge(f, stage).map(_._1).sorted
-      val dir = dataDir(root, table)
-      staged.map { p =>
-        val src = new Path(s"$stage/$p")
-        val len = f.getFileStatus(src).getLen
-        val dst = new Path(s"$dir/$p")
-        f.mkdirs(dst.getParent)
-        if (!f.rename(src, dst))
-          throw new java.io.IOException(
-            s"failed to move staged file $p into $dir")
-        (p, len)
-      }
+      adoptStagedFiles(spark, root, table, stage,
+        listDataFilesWithAge(f, stage).map(_._1))
     } finally f.delete(new Path(stage), true)
   }
 
@@ -271,9 +261,6 @@ object Snapshots {
   def versionSchema(spark: SparkSession, root: String, table: String,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
     manifest(spark, root, table, version).schema
-
-  private def sidecarPath(root: String, table: String, version: Long) =
-    s"${manifestDir(root, table)}/stats_v$version"
 
   /** Atomically publish version N's file list. The bytes go to a hidden
     * temp file, then [[publishArbiter]]`.putIfAbsent` moves them to
@@ -425,8 +412,7 @@ object Snapshots {
     * plan).
     */
   private def stageFreshStats(spark: SparkSession, root: String, table: String,
-      added: Seq[(String, Long)], statsCols: Seq[String])
-      : Option[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])] = {
+      added: Seq[(String, Long)], statsCols: Seq[String]): Option[Sidecar] = {
     if (added.isEmpty) return None
     val dir = dataDir(root, table)
     if (statsCols.isEmpty) {
@@ -448,133 +434,13 @@ object Snapshots {
           org.apache.spark.sql.Row(p, n, bytes)
         }
       }, scala.concurrent.duration.Duration.Inf)
-      Some((schema, rows))
+      Some(Sidecar(schema, rows))
     } else {
       import spark.implicits._
       val stats = deriveFileStats(spark, dir, added.map(_._1), statsCols)
         .join(broadcast(added.toDF("file", "bytes")), Seq("file"), "left")
-      Some((stats.schema, stats.collect().toSeq)) // one row per added file
+      Some(Sidecar(stats.schema, stats.collect().toSeq)) // one row per added file
     }
-  }
-
-  /** Write the `stats_v<N>` sidecar: one row per LIVE file — fresh stats
-    * for added files, carried-forward
-    * stats for kept files (from the previous version's sidecar), null
-    * stats for files covered by neither (pruned reads open those
-    * conservatively). Every row records the file's exact byte length
-    * (write-derived) and — when the file's rows were counted at its own
-    * commit — its row count, so the catalog can report planner statistics
-    * and build file indexes with zero listing. With MOR delete vectors
-    * live, carried stats and counts OVERSTATE the readable rows — the
-    * conservative direction for both skipping and planning.
-    */
-  private def writeSidecar(spark: SparkSession, root: String, table: String,
-      version: Long, files: Seq[String],
-      freshStats: Option[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])],
-      carried: Seq[String], prevVersion: Option[Long]): Unit = {
-    val f = fs(spark, root)
-    // fast path: pure driver I/O (parquet-hadoop read/merge/write of the
-    // manifest-sized sidecar). Paying a Spark read + two joins + a
-    // one-task write JOB per commit was the dominant per-commit constant
-    // (q89/q90/q108 in the round-14 bench). Falls through to the Spark
-    // path for stats-column types outside SidecarIO's narrow set.
-    if (writeSidecarDriverSide(f, root, table, version, files, freshStats,
-        carried, prevVersion)) return
-    val fresh = freshStats.map { case (sch, rows) =>
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), sch)
-    }
-    import spark.implicits._
-    val keptStats = prevVersion
-      .map(v => new Path(sidecarPath(root, table, v)))
-      .filter(f.exists)
-      .map(p => spark.read.parquet(p.toString)
-        // semi-join against the carried list, not a literal IN-list: at
-        // the design point (~10⁵ live files) an IN-list is a 10⁵-literal
-        // driver-built expression; the broadcast build side is the same
-        // manifest-sized data without the expression-tree cost
-        .join(broadcast(carried.toDF("file")), Seq("file"), "left_semi"))
-    val stats = (fresh.toSeq ++ keptStats.toSeq)
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    stats.foreach { st =>
-      // one row per live file (file list is manifest-sized — driver data).
-      // Written to a temp path and RENAMED into place: the sidecar lands
-      // after the manifest publish, and a reader resolving the new version
-      // in that window must see either the complete sidecar or none at
-      // all (absence degrades conservatively) — never a half-written
-      // directory that fails schema inference.
-      val dst = new Path(sidecarPath(root, table, version))
-      val tmp = new Path(
-        s"${dst}.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-      try {
-        files.toDF("file").join(st, Seq("file"), "left")
-          .coalesce(1) // sidecar is one row per FILE — driver-tiny
-          .write.mode("overwrite").parquet(tmp.toString)
-        if (!f.rename(tmp, dst))
-          throw new java.io.IOException(s"failed to publish sidecar $dst")
-      } finally f.delete(tmp, true)
-    }
-  }
-
-  /** [[writeSidecar]]'s driver-only fast path: replicate the Spark plan
-    * (prev-sidecar read ▸ carried semi-join ▸ unionByName(allowMissing) ▸
-    * live-file left join ▸ single-part write ▸ tmp+rename publish) over
-    * in-memory Rows. Returns false — writing NOTHING — whenever any input
-    * falls outside [[SidecarIO]]'s supported shape; the caller then runs
-    * the Spark path, so exotic stats columns stay correct, just slower.
-    */
-  private def writeSidecarDriverSide(f: FileSystem, root: String,
-      table: String, version: Long, files: Seq[String],
-      freshStats: Option[(org.apache.spark.sql.types.StructType, Seq[org.apache.spark.sql.Row])],
-      carried: Seq[String], prevVersion: Option[Long]): Boolean = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    if (!freshStats.forall { case (sch, _) => SidecarIO.supported(sch) })
-      return false
-    val prevKept: Option[(StructType, Seq[org.apache.spark.sql.Row])] =
-      prevVersion.map(v => new Path(sidecarPath(root, table, v)))
-        .filter(f.exists) match {
-        case None => None
-        case Some(p) => SidecarIO.read(f.getConf, p) match {
-          case None => return false // legacy/exotic sidecar → Spark path
-          case Some((st, rows)) =>
-            if (st.fields.isEmpty || !st.fieldNames.contains("file"))
-              return false
-            val fi = st.fieldIndex("file")
-            val carriedSet = carried.toSet
-            Some((st, rows.filter(r =>
-              !r.isNullAt(fi) && carriedSet(r.getString(fi)))))
-        }
-      }
-    val parts = freshStats.toSeq ++ prevKept.toSeq
-    if (parts.isEmpty) return true // no stats at all: nothing to publish
-    val (st, rows) = SidecarIO.unionByName(parts) match {
-      case Some(m) => m
-      case None => return false // same column, two types → Spark cast path
-    }
-    if (!st.fieldNames.contains("file")) return false
-    val fi = st.fieldIndex("file")
-    val byFile = rows.iterator
-      .filterNot(_.isNullAt(fi)).map(r => r.getString(fi) -> r).toMap
-    val rest = st.fields.filterNot(_.name == "file").toSeq
-    val outSchema = StructType(StructField("file", StringType) +: rest)
-    val outRows = files.map { p =>
-      byFile.get(p) match {
-        case Some(r) => org.apache.spark.sql.Row.fromSeq(
-          p +: rest.map(fd => r.get(st.fieldIndex(fd.name))))
-        case None => org.apache.spark.sql.Row.fromSeq(
-          p +: rest.map(_ => null))
-      }
-    }
-    val dst = new Path(sidecarPath(root, table, version))
-    val tmp = new Path(
-      s"${dst}.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
-    try {
-      if (!SidecarIO.write(f.getConf, tmp, outSchema, outRows)) return false
-      if (!f.rename(tmp, dst))
-        throw new java.io.IOException(s"failed to publish sidecar $dst")
-    } finally f.delete(tmp, true)
-    true
   }
 
   /** Provision an EMPTY versioned table: publish v1 as a zero-file
@@ -631,8 +497,7 @@ object Snapshots {
       version: Long, m: Manifest, statsFrom: Long): Long = {
     beforePublish()
     writeManifest(fs(spark, root), root, table, version, m)
-    writeSidecar(spark, root, table, version, m.files, None, m.files,
-      Some(statsFrom))
+    Sidecar.publish(spark, root, table, version, m.files, None, Some(statsFrom))
     version
   }
 
@@ -765,8 +630,7 @@ object Snapshots {
     *
     * With `statsCols`, per-file min/max stats are derived for the files
     * this commit ADDS and merged with the kept files' carried-forward
-    * stats into the version's `stats_v<N>` sidecar (see
-    * [[readVersionPruned]]).
+    * stats into the version's [[Sidecar]] (see [[readVersionPruned]]).
     */
   def commit(df: DataFrame, root: String, table: String,
       partitionCols: Seq[String], statsCols: Seq[String] = Nil): Long =
@@ -876,8 +740,7 @@ object Snapshots {
     private def physStatsCol(c: String): String = mappingSchema
       .flatMap(_.fields.find(_.name == c))
       .map(ColumnMapping.physicalName).getOrElse(c)
-    lazy val freshStats: Option[(org.apache.spark.sql.types.StructType,
-      Seq[org.apache.spark.sql.Row])] =
+    lazy val freshStats: Option[Sidecar] =
       stageFreshStats(df.sparkSession, root, table, added,
         statsCols.map(physStatsCol))
     /** Distinct partition prefixes present in the frame (dynamic
@@ -949,8 +812,7 @@ object Snapshots {
   private def publishFiles(spark: SparkSession, root: String, table: String,
       prevVersion: Option[Long], base: Manifest, carried: Seq[String],
       added: Seq[String], incoming: org.apache.spark.sql.types.StructType,
-      freshStats: Option[(org.apache.spark.sql.types.StructType,
-        Seq[org.apache.spark.sql.Row])]): Long = {
+      freshStats: Option[Sidecar]): Long = {
     val version = prevVersion.getOrElse(0L) + 1
     val files = (carried ++ added).sorted
     val carriedSet = carried.toSet
@@ -960,8 +822,7 @@ object Snapshots {
       .withSchema(mergedSchema(spark, root, table, prevVersion, base, incoming))
     beforePublish()
     writeManifest(fs(spark, root), root, table, version, m)
-    writeSidecar(spark, root, table, version, files, freshStats, carried,
-      prevVersion)
+    Sidecar.publish(spark, root, table, version, files, freshStats, prevVersion)
     version
   }
 
@@ -1308,11 +1169,11 @@ object Snapshots {
     }
   }
 
-  /** Move task-written files from a streaming epoch's hidden staging
-    * directory into `data/`, preserving their Hive-layout relative paths;
-    * returns the moved (relativePath, byteLength) pairs. File names carry
-    * task UUIDs, so moves are collision-free; per-file driver metadata
-    * ops, exactly like [[writeData]]'s stage→move.
+  /** Move task-written files from a hidden staging directory (a batch
+    * commit's, [[writeData]], or a streaming epoch's) into `data/`,
+    * preserving their Hive-layout relative paths; returns the moved
+    * (relativePath, byteLength) pairs. File names carry write-job or task
+    * UUIDs, so moves are collision-free; per-file driver metadata ops.
     */
   private[graft] def adoptStagedFiles(spark: SparkSession, root: String,
       table: String, stageDir: String, rels: Seq[String]): Seq[(String, Long)] = {
@@ -1324,7 +1185,7 @@ object Snapshots {
       val dst = new Path(s"$dir/$p")
       f.mkdirs(dst.getParent)
       if (!f.rename(src, dst))
-        throw new java.io.IOException(s"failed to adopt staged file $p into $dir")
+        throw new java.io.IOException(s"failed to move staged file $p into $dir")
       (p, len)
     }
   }
@@ -1441,8 +1302,8 @@ object Snapshots {
         files = files, addedAt = files.map(_ => version), deletes = Nil,
         schema = Some(ColumnMapping.unmapped(full.schema)),
         partitionCols = partitionCols, droppedPhysical = Nil))
-    writeSidecar(spark, root, table, version, files,
-      stageFreshStats(spark, root, table, added, statsCols), Seq.empty, None)
+    Sidecar.publish(spark, root, table, version, files,
+      stageFreshStats(spark, root, table, added, statsCols), None)
     version
   }
 
@@ -1452,53 +1313,39 @@ object Snapshots {
     * commits, all-null files) always qualify. Exposed for pruning asserts.
     */
   def candidateFiles(spark: SparkSession, root: String, table: String,
-      version: Long, statsCol0: String, lo: Column, hi: Column): Seq[String] = {
-    val all = liveFiles(spark, root, table, version).sorted
-    val f = fs(spark, root)
-    val p = new Path(sidecarPath(root, table, version))
-    if (!f.exists(p)) return all
-    // sidecar stats are keyed by PHYSICAL column names (stable across
-    // renames — stats continuity survives a RENAME COLUMN); translate a
-    // logical probe, identity on unmapped tables
-    val statsCol = versionSchema(spark, root, table, version)
-      .flatMap(_.fields.find(_.name == statsCol0))
-      .map(ColumnMapping.physicalName).getOrElse(statsCol0)
-    // an unreadable sidecar (in principle impossible after the tmp+rename
-    // publish, but e.g. a partially-copied lake) degrades conservatively
-    // to the unpruned file list, never to a read failure
-    val sidecar = scala.util.Try(spark.read.parquet(p.toString)) match {
-      case scala.util.Success(s) => s
-      case scala.util.Failure(_) => return all
-    }
-    if (!sidecar.columns.contains(s"min_$statsCol")) return all
-    val cands = sidecar
-      .filter(col(s"min_$statsCol").isNull || col(s"max_$statsCol").isNull ||
-        (col(s"min_$statsCol") <= hi && col(s"max_$statsCol") >= lo))
-      .select("file")
-      .collect() // one row per FILE — sidecar-sized, not data-sized
-      .map(_.getString(0)).toSet
-    // a live file absent from the sidecar (should not happen — the sidecar
-    // carries one row per live file) is read conservatively
-    val inSidecar = sidecar.select("file")
-      .collect().map(_.getString(0)).toSet // sidecar-sized
-    all.filter(fp => cands.contains(fp) || !inSidecar.contains(fp))
-  }
+      version: Long, statsCol: String, lo: Column, hi: Column): Seq[String] =
+    candidateFilesRect(spark, root, table, version, Seq((statsCol, lo, hi)))
 
-  /** Multi-column rectangle pruning: the intersection of each predicate's
-    * [[candidateFiles]] — a file is opened only when EVERY probed column's
-    * committed range can intersect its window. With a Z-ordered compact
-    * ([[compact]] `zOrder = true`) the per-file boxes are tight on every
-    * cluster column at once, so a 2-D rectangle opens ~O(selectivity)
-    * files whichever axis constrains. Conservative per column, exactly
-    * like the 1-D form.
+  /** Multi-column rectangle pruning: a file is opened only when EVERY
+    * probed column's committed range can intersect its window. With a
+    * Z-ordered compact ([[compact]] `zOrder = true`) the per-file boxes
+    * are tight on every cluster column at once, so a 2-D rectangle opens
+    * ~O(selectivity) files whichever axis constrains. Conservative per
+    * column, exactly like the 1-D form. One manifest and one sidecar load
+    * per call, both on the driver ([[Sidecar.mayContain]]).
     */
   def candidateFilesRect(spark: SparkSession, root: String, table: String,
       version: Long, preds: Seq[(String, Column, Column)]): Seq[String] =
-    preds.map { case (c, lo, hi) =>
-      candidateFiles(spark, root, table, version, c, lo, hi).toSet
-    }.reduceOption(_ intersect _)
-      .map(s => liveFiles(spark, root, table, version).sorted.filter(s))
-      .getOrElse(liveFiles(spark, root, table, version).sorted)
+    candidatesOf(spark, root, table, version,
+      manifest(spark, root, table, version), preds)
+
+  private def candidatesOf(spark: SparkSession, root: String, table: String,
+      version: Long, m: Manifest,
+      preds: Seq[(String, Column, Column)]): Seq[String] = {
+    val all = m.files.sorted
+    Sidecar.load(spark, root, table, version) match {
+      case None => all
+      case Some(sc) =>
+        // sidecar stats are keyed by PHYSICAL column names (stable across
+        // renames — stats continuity survives a RENAME COLUMN); translate
+        // logical probes, identity on unmapped tables
+        val phys = preds.map { case (c, lo, hi) =>
+          (m.schema.flatMap(_.fields.find(_.name == c))
+            .map(ColumnMapping.physicalName).getOrElse(c), lo, hi)
+        }
+        all.filter(sc.mayContain(spark, phys))
+    }
+  }
 
   /** Rectangle read over a version: open only [[candidateFilesRect]]'s
     * files, apply merge-on-read vectors, then re-apply every exact row
@@ -1507,13 +1354,15 @@ object Snapshots {
     */
   def readVersionRect(spark: SparkSession, root: String, table: String,
       version: Long, preds: Seq[(String, Column, Column)]): DataFrame = {
-    val dir = dataDir(root, table)
-    val files = candidateFilesRect(spark, root, table, version, preds)
     val m = manifest(spark, root, table, version)
+    val files = candidatesOf(spark, root, table, version, m, preds)
     val base =
-      if (files.isEmpty) readVersion(spark, root, table, version).filter(lit(false))
+      if (files.isEmpty)
+        // preserve the schema with an empty relation
+        readVersion(spark, root, table, version).filter(lit(false))
       else renameToLogical(
-        applyDeletes(readFiles(spark, root, table, version, dir, files),
+        applyDeletes(
+          readFiles(spark, root, table, version, dataDir(root, table), files),
           spark, root, table, m),
         m.schema)
     preds.foldLeft(base) { case (df, (c, lo, hi)) =>
@@ -1521,31 +1370,19 @@ object Snapshots {
     }
   }
 
-  /** Pruned time-travel read: open only [[candidateFiles]] of `version`,
-    * then re-apply the exact row predicate — result-identical to
-    * `readVersion(...).filter(statsCol between (lo, hi))` by construction,
-    * minus the files whose stats prove they cannot match. Works on ANY
-    * version: the stats consulted are exactly the ones committed with that
-    * version's file list, so neither time travel nor [[compact]] can see
-    * stale skipping metadata. Merge-on-read delete vectors apply exactly
-    * as in [[readVersion]].
+  /** Pruned time-travel read: [[readVersionRect]] with one window — open
+    * only [[candidateFiles]] of `version`, then re-apply the exact row
+    * predicate, so the result equals
+    * `readVersion(...).filter(statsCol between (lo, hi))` minus the files
+    * whose stats prove they cannot match. Works on ANY version: the stats
+    * consulted are exactly the ones committed with that version's file
+    * list, so neither time travel nor [[compact]] can see stale skipping
+    * metadata. Merge-on-read delete vectors apply exactly as in
+    * [[readVersion]].
     */
   def readVersionPruned(spark: SparkSession, root: String, table: String,
-      version: Long, statsCol: String, lo: Column, hi: Column): DataFrame = {
-    val dir = dataDir(root, table)
-    val files = candidateFiles(spark, root, table, version, statsCol, lo, hi)
-    val m = manifest(spark, root, table, version)
-    val base =
-      if (files.isEmpty)
-        // preserve the schema with an empty relation
-        readVersion(spark, root, table, version).filter(lit(false))
-      else renameToLogical(
-        applyDeletes(
-          readFiles(spark, root, table, version, dir, files),
-          spark, root, table, m),
-        m.schema)
-    base.filter(col(statsCol) >= lo && col(statsCol) <= hi)
-  }
+      version: Long, statsCol: String, lo: Column, hi: Column): DataFrame =
+    readVersionRect(spark, root, table, version, Seq((statsCol, lo, hi)))
 
   /** Open an explicit (relative) file list under the version's schema
     * contract: with a manifest schema, files that predate a column read
@@ -1827,7 +1664,7 @@ object Snapshots {
     deadChanges.foreach(p => f.delete(new Path(s"$cdir/$p"), false))
     (1L until keepFrom).foreach { v =>
       f.delete(manifestPathOf(root, table, v), false)
-      f.delete(new Path(sidecarPath(root, table, v)), true)
+      f.delete(Sidecar.dir(root, table, v), true)
     }
     // crashed writers leak HIDDEN staging dirs (`.stage-*` from batch
     // commits, `.delstage-*` from deleteWhere, `.streamstage-*` from the

@@ -655,7 +655,7 @@ object LakeQueries {
     * history re-queried through the catalog — the same `event_id BETWEEN`
     * range over `VERSION AS OF 1/2/3` must aggregate identically to the
     * oracle's recompute, with the scan consulting each version's
-    * `stats_v<N>` sidecar so the SQL read opens the same candidate file
+    * [[graft.lake.Sidecar]] so the SQL read opens the same candidate file
     * set `readVersionPruned` does (GraftCatalogSpec pins the opened-file
     * equality; this gate pins result equivalence). Closes the two-read-
     * APIs gap: before this, only the Scala path skipped files.

@@ -3,6 +3,7 @@ package graft.sql
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal, EqualTo => CatalystEqualTo, In => CatalystIn}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read.{InputPartition, SupportsRuntimeFiltering, VariantExtraction}
@@ -47,7 +48,7 @@ class DppParquetScan(
     partitionFilters: Seq[Expression],
     dataFilters: Seq[Expression],
     pushedVariantExtractions: Array[VariantExtraction],
-    fileStats: () => Option[SidecarSkip.StatsIndex] = () => None,
+    fileStats: Option[graft.lake.Sidecar] = None,
     val mor: Option[MorRead.Spec] = None)
   extends ParquetScan(sparkSession, hadoopConf, fileIndex, dataSchema,
     readDataSchema, readPartitionSchema, pushedFilters, options,
@@ -79,7 +80,8 @@ class DppParquetScan(
   // these against the pruned relation output, and an absent column is an
   // AnalysisException, not a skipped optimization
   override def filterAttributes(): Array[NamedReference] =
-    readPartitionSchema.fieldNames.map(Expressions.column)
+    readPartitionSchema.fieldNames.map(c =>
+      Expressions.column(QuotingUtils.quoteIdentifier(c)))
 
   override def filter(filters: Array[sources.Filter]): Unit =
     runtimePartitionFilters = filters.toSeq.flatMap(toPartitionPredicate)
@@ -182,7 +184,7 @@ class DppParquetScan(
     // does. No stats / no pushed filters → pass through unchanged.
     val pruned =
       if (pushedFilters.isEmpty) base
-      else fileStats() match {
+      else fileStats match {
         case Some(stats) => SidecarSkip.prune(base, stats, pushedFilters)
         case None => base
       }
@@ -210,7 +212,7 @@ class DppParquetScan(
     */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics =
-    fileStats() match {
+    fileStats match {
       case Some(idx) if idx.bytes.nonEmpty &&
           idx.bytes.keySet == idx.ranges.keySet =>
         val candidates = idx.ranges.keysIterator.filter { file =>
@@ -252,7 +254,7 @@ class DppParquetScanBuilder(
     schema: StructType,
     dataSchema: StructType,
     options: CaseInsensitiveStringMap,
-    fileStats: () => Option[SidecarSkip.StatsIndex] = () => None,
+    fileStats: Option[graft.lake.Sidecar] = None,
     mor: Option[MorRead.Spec] = None)
   extends ParquetScanBuilder(sparkSession, fileIndex, schema, dataSchema, options) {
 
@@ -328,8 +330,8 @@ class SnapshotInsertTable(
   // tables that declare partitioning
   override def partitioning()
       : Array[org.apache.spark.sql.connector.expressions.Transform] =
-    partitionCols.map(org.apache.spark.sql.connector.expressions.Expressions
-      .identity).toArray
+    partitionCols.map(c =>
+      Expressions.identity(QuotingUtils.quoteIdentifier(c))).toArray
 
   // deliberately NOT a FileTable: the analyzer's FallBackFileSourceV2
   // rule rewrites INSERTs over any FileTable back to the V1 file-format
@@ -419,12 +421,11 @@ class SnapshotInsertTable(
 }
 
 /** [[ParquetTable]] whose scans support dynamic partition pruning and —
-  * when `statsDir` points at a Snapshots `stats_v<N>` sidecar — file-level
-  * data skipping on pushed filters ([[SidecarSkip]]). The sidecar loads
-  * lazily on the first scan that can use it and is memoized for the
-  * table's lifetime; a version's sidecar is immutable (committed with the
-  * manifest), so the catalog's per-version table cache makes this a
-  * once-per-version cost.
+  * given a Snapshots version's loaded [[graft.lake.Sidecar]] — file-level
+  * data skipping on pushed filters ([[SidecarSkip]]) and exact planner
+  * statistics. A version's sidecar is immutable (committed with the
+  * manifest), so the catalog's per-version table cache loads it once per
+  * version.
   */
 class DppParquetTable(
     name: String,
@@ -432,18 +433,14 @@ class DppParquetTable(
     options: CaseInsensitiveStringMap,
     paths: Seq[String],
     userSpecifiedSchema: Option[StructType],
-    statsDir: Option[String] = None,
-    mor: Option[MorRead.Spec] = None,
-    preloadedStats: Option[SidecarSkip.StatsIndex] = None)
+    stats: Option[graft.lake.Sidecar] = None,
+    mor: Option[MorRead.Spec] = None)
   extends ParquetTable(name, sparkSession, options, paths,
     userSpecifiedSchema, classOf[ParquetFileFormat]) {
 
-  private lazy val statsIndex: Option[SidecarSkip.StatsIndex] =
-    preloadedStats.orElse(statsDir.flatMap(d => SidecarSkip.load(sparkSession, d)))
-
   override def newScanBuilder(params: CaseInsensitiveStringMap): ParquetScanBuilder =
     new DppParquetScanBuilder(sparkSession, fileIndex, schema, dataSchema,
-      params, () => statsIndex, mor)
+      params, stats, mor)
 }
 
 /** [[DppParquetTable]] whose file index is built ENTIRELY from the
@@ -461,11 +458,10 @@ class ManifestIndexedParquetTable(
     dataDir: String,
     relFiles: Seq[String],
     tableSchema: StructType,
-    stats: SidecarSkip.StatsIndex,
+    stats: graft.lake.Sidecar,
     mor: Option[MorRead.Spec])
   extends DppParquetTable(name, sparkSession, options,
-    relFiles.map(r => s"$dataDir/$r"), Some(tableSchema),
-    statsDir = None, mor = mor, preloadedStats = Some(stats)) {
+    relFiles.map(r => s"$dataDir/$r"), Some(tableSchema), Some(stats), mor) {
 
   override lazy val fileIndex
       : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex = {

@@ -1,5 +1,6 @@
 package graft.sql
 
+import graft.lake.Sidecar
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
@@ -129,13 +130,13 @@ class GraftCatalog extends TableCatalog {
   }
 
   private def widened(name: String, opts: CaseInsensitiveStringMap,
-      paths: Seq[String], statsDir: Option[String] = None): DppParquetTable = {
+      paths: Seq[String], stats: Option[Sidecar] = None): DppParquetTable = {
     val probe = new DppParquetTable(name, SparkSession.active, opts, paths,
-      userSpecifiedSchema = None, statsDir)
+      userSpecifiedSchema = None, stats)
     widenedSchema(probe) match {
       case None => probe
       case Some(schema) => new DppParquetTable(name, SparkSession.active,
-        opts, paths, Some(schema), statsDir)
+        opts, paths, Some(schema), stats)
     }
   }
 
@@ -182,19 +183,20 @@ class GraftCatalog extends TableCatalog {
     // explicit per-version file list, exactly like Snapshots.readVersion
     val opts = new CaseInsensitiveStringMap(
       java.util.Map.of("path", dataDir, "basePath", dataDir))
-    val statsDir = Some(s"$root/_snapshots/${ident.name}/stats_v$version")
+    // the sidecar loads once per cached version, on the driver: when it
+    // records every live file's byte length, the table plans from a
+    // manifest-built file index — zero listing/stat calls — and its scans
+    // report exact planner statistics and skip files on pushed filters
+    val sidecar = Sidecar.load(spark, root, ident.name, version)
     // manifest-carried schema (versions with schema tracking): the SQL
     // read then matches Snapshots.readVersion exactly — time travel sees
     // each version's own columns, pre-column files read null — and no
     // inference pass runs at all; only the BIGINT partition widening
-    // applies on top (partition columns recovered from the relative
-    // paths' `c=v` segments — the manifest list already loaded, no second
-    // manifest read and no listing)
+    // applies on top (partition columns from the manifest's layout — no
+    // second manifest read and no listing)
     val t = m.schema match {
       case Some(sch) =>
-        val partCols = m.files.headOption.toSeq
-          .flatMap(_.split('/').dropRight(1).map(_.takeWhile(_ != '=')))
-          .toSet
+        val partCols = m.partitionLayout.toSet
         // column mapping (RENAME/DROP COLUMN): the files spell PHYSICAL
         // names — the inner table scans under the physical schema and a
         // name-translating wrapper presents the logical view. Unmapped
@@ -211,19 +213,13 @@ class GraftCatalog extends TableCatalog {
           if (m.deletes.isEmpty) None
           else Some(MorRead.resolve(spark, s"$root/${ident.name}/deletes",
             m.deletes, m.addedAtOf, widened))
-        // sidecar loaded EAGERLY (once per cached version): when it
-        // records every live file's byte length, the table plans from a
-        // manifest-built file index — zero listing/stat calls — and its
-        // scans report exact planner statistics
-        val sidecar = SidecarSkip.load(spark, statsDir.get)
         val innerT = sidecar match {
           case Some(idx) if m.files.forall(idx.bytes.contains) =>
             new ManifestIndexedParquetTable(s"${ident.name}@v$version",
               spark, opts, dataDir, m.files, widened, idx, morSpec)
           case _ =>
             new DppParquetTable(s"${ident.name}@v$version", spark, opts,
-              files, Some(widened), statsDir, morSpec,
-              preloadedStats = sidecar)
+              files, Some(widened), sidecar, morSpec)
         }
         if (!mapped) innerT
         else new MappedReadTable(innerT, widenPartitionInts(sch, partCols))
@@ -231,7 +227,7 @@ class GraftCatalog extends TableCatalog {
         require(m.deletes.isEmpty,
           s"version $version of ${ident.name} carries delete vectors but " +
             "no manifest schema — read it via graft.lake.Snapshots.readVersion")
-        widened(s"${ident.name}@v$version", opts, files, statsDir)
+        widened(s"${ident.name}@v$version", opts, files, sidecar)
     }
     cache.synchronized { cache.putIfAbsent(key, t) }
     t
@@ -418,8 +414,10 @@ class GraftCatalog extends TableCatalog {
   /** The write-side shape of a versioned table: its COMMITTED (unwidened)
     * schema — the append's additive-evolution check type-matches incoming
     * columns against the manifest schema, so DML must ask for exactly
-    * those types — plus the partition layout and the stats columns the
-    * previous sidecar tracks (for skipping continuity across writes).
+    * those types — plus the manifest's partition layout and the stats
+    * columns the latest sidecar tracks (for skipping continuity across
+    * writes; a truncated version's sidecar keeps them, so the first INSERT
+    * after a truncate keeps deriving skipping stats).
     */
   private def insertShape(ident: Identifier)
       : (org.apache.spark.sql.types.StructType, Seq[String], Seq[String]) = {
@@ -429,55 +427,22 @@ class GraftCatalog extends TableCatalog {
       .getOrElse(throw new NoSuchTableException(
         Seq(catalogName) ++ ident.namespace :+ ident.name))
     val m = graft.lake.Snapshots.manifest(spark, root, ident.name, latest)
-    val dataDir = s"$root/${ident.name}/data"
-    val files = m.files.map(p => s"$dataDir/$p") // manifest-sized
-    if (files.isEmpty)
-      // a truncated (zero-file) version: the manifest records the schema
-      // AND the partition layout since operation tracking, so the write
-      // shape derives without any live file — `INSERT INTO` a truncated
-      // table just works. Pre-tracking empty manifests (no schema) still
-      // refuse: guessing a layout would corrupt directory inference.
-      // Stats continuity survives the truncate too: the empty version's
-      // sidecar still records the tracked min_/max_ columns, so the first
-      // INSERT after a truncate keeps deriving skipping stats.
-      return m.schema match {
-        case Some(sch) => (sch, m.partitionCols, sidecarStatsCols(latest, ident))
-        case None => throw new IllegalStateException(
-          s"version $latest of ${ident.name} has no live files and no " +
-            "manifest schema to derive a write layout from — commit the " +
-            "first rows via graft.lake.Snapshots")
-      }
-    val opts = new CaseInsensitiveStringMap(
-      java.util.Map.of("path", dataDir, "basePath", dataDir))
-    val (schema, partitionCols) = m.schema match {
-      case Some(sch) =>
-        val parts = m.files.headOption.toSeq
-          .flatMap(_.split('/').dropRight(1).map(_.takeWhile(_ != '=')))
-        (sch, parts)
-      case None =>
-        val probe = new DppParquetTable(s"${ident.name}@v$latest",
-          spark, opts, files, userSpecifiedSchema = None)
-        (probe.schema, probe.fileIndex.partitionSchema.fieldNames.toSeq)
+    val schema = m.schema.getOrElse {
+      // a manifest that predates schema tracking: infer from the files. A
+      // zero-file one has nothing to infer from and refuses — guessing a
+      // layout would corrupt directory inference
+      if (m.files.isEmpty) throw new IllegalStateException(
+        s"version $latest of ${ident.name} has no live files and no " +
+          "manifest schema to derive a write layout from — commit the " +
+          "first rows via graft.lake.Snapshots")
+      val dataDir = s"$root/${ident.name}/data"
+      new DppParquetTable(s"${ident.name}@v$latest", spark,
+        new CaseInsensitiveStringMap(
+          java.util.Map.of("path", dataDir, "basePath", dataDir)),
+        m.files.map(p => s"$dataDir/$p"), userSpecifiedSchema = None).schema
     }
-    // stats continuity: keep deriving min/max for the columns the
-    // previous version's sidecar tracks (sidecar-footer read, driver-tiny)
-    (schema, partitionCols, sidecarStatsCols(latest, ident))
-  }
-
-  /** Columns the version's stats sidecar tracks (min_/max_ pairs) — the
-    * write shape keeps deriving these so file skipping survives appends
-    * (works with or without live files: a Try-based footer read).
-    */
-  private def sidecarStatsCols(version: Long, ident: Identifier): Seq[String] = {
-    val dir = s"$root/_snapshots/${ident.name}/stats_v$version"
-    val p = new Path(dir)
-    // exists-check first: a version without a sidecar (a freshly CREATEd
-    // table) must not pay — or log — a failed read analysis
-    if (!fs(p).exists(p)) return Seq.empty
-    scala.util.Try(
-        SparkSession.active.read.parquet(dir).schema.fieldNames.toSeq)
-      .getOrElse(Seq.empty)
-      .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+    (schema, m.partitionLayout, Sidecar.load(spark, root, ident.name, latest)
+      .map(_.statsCols).getOrElse(Nil))
   }
 
   /** Time travel: `SELECT … FROM graft.t VERSION AS OF 2` — resolves the
@@ -754,37 +719,19 @@ private[sql] class FilesMetadataTable(root: String, table: String,
           val spark = SparkSession.active
           val m = graft.lake.Snapshots.manifest(spark, root, table, version)
           val addedAt = m.addedAtOf
-          // the sidecar is one row per live file — file-count-sized
-          val sidecarDir = s"$root/_snapshots/$table/stats_v$version"
-          val sidecar: Map[String, org.apache.spark.sql.Row] =
-            if (!new Path(sidecarDir).getFileSystem(
-                spark.sessionState.newHadoopConf()).exists(new Path(sidecarDir)))
-              Map.empty
-            else scala.util.Try(spark.read.parquet(sidecarDir).collect()
-              .flatMap(r => Option(r.getAs[String]("file")).map(_ -> r))
-              .toMap).getOrElse(Map.empty)
+          val sidecar = Sidecar.load(spark, root, table, version)
           m.files.sorted.map { f =>
-            val sc = sidecar.get(f)
-            def longOf(c: String): Any = sc.flatMap { r =>
-              if (!r.schema.fieldNames.contains(c) || r.isNullAt(
-                  r.fieldIndex(c))) None
-              else Some(r.getAs[Number](c).longValue())
-            }.map(Long.box).orNull
-            val stats = sc.map { r =>
-              val kv = r.schema.fieldNames.toSeq
-                .filter(n => n.startsWith("min_") || n.startsWith("max_"))
-                .sorted
-                .flatMap { n =>
-                  if (r.isNullAt(r.fieldIndex(n))) None
-                  else Some(n -> String.valueOf(r.get(r.fieldIndex(n))))
-                }
+            def longOf(per: Sidecar => Map[String, Long]): Any =
+              sidecar.flatMap(per(_).get(f)).map(Long.box).orNull
+            val stats = sidecar.filter(_.byFile.contains(f)).map { sc =>
+              val kv = sc.boundsOf(f)
               org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
                 kv.map(p => UTF8String.fromString(p._1)).toArray,
-                kv.map(p => UTF8String.fromString(p._2)).toArray)
+                kv.map(p => UTF8String.fromString(String.valueOf(p._2))).toArray)
             }.orNull
             new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
               Array[Any](UTF8String.fromString(f), version,
-                addedAt.getOrElse(f, 0L), longOf("bytes"), longOf("rows"),
+                addedAt.getOrElse(f, 0L), longOf(_.bytes), longOf(_.rows),
                 stats))
           }.toArray
         }

@@ -129,14 +129,6 @@ object GraftSqlParser {
           s"registered graft catalog (no spark.sql.catalog.$catalogName.root)" +
           " — note these statements accept plain two-part catalog.table " +
           "identifiers only (no backticks, no three-part names)"))
-
-  private[sql] def statsColsOf(spark: SparkSession, root: String,
-      table: String, version: Long): Seq[String] =
-    scala.util.Try(
-        spark.read.parquet(s"$root/_snapshots/$table/stats_v$version")
-          .schema.fieldNames.toSeq)
-      .getOrElse(Seq.empty)
-      .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
 }
 
 /** `OPTIMIZE` — compact the latest version (see [[GraftSqlParser]]).
@@ -157,7 +149,8 @@ case class OptimizeTableCommand(catalogName: String, table: String,
     val latest = Snapshots.latestVersion(spark, root, table).getOrElse(
       throw new IllegalArgumentException(s"no snapshot of $table to optimize"))
     val m = Snapshots.manifest(spark, root, table, latest)
-    val statsCols = GraftSqlParser.statsColsOf(spark, root, table, latest)
+    val sidecar = graft.lake.Sidecar.load(spark, root, table, latest)
+    val statsCols = sidecar.map(_.statsCols).getOrElse(Nil)
     val clusterCols =
       if (zorderCols.nonEmpty) zorderCols
       else if (statsCols.nonEmpty) statsCols
@@ -176,7 +169,7 @@ case class OptimizeTableCommand(catalogName: String, table: String,
       val target = spark.conf
         .getOption("spark.graft.optimize.targetFileBytes")
         .map(_.toLong).getOrElse(128L * 1024 * 1024)
-      SidecarSkip.load(spark, s"$root/_snapshots/$table/stats_v$latest")
+      sidecar
         .filter(idx => m.files.nonEmpty && m.files.forall(idx.bytes.contains))
         .map(idx => math.max(1L,
           (m.files.map(idx.bytes).sum + target - 1) / target).toInt)

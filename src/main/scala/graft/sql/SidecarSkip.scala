@@ -1,13 +1,13 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
+import graft.lake.Sidecar
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources
 
 /** File-level data skipping for catalog scans over Snapshots-versioned
-  * tables, driven by the version's `stats_v<N>` sidecar (one row per live
-  * file with per-column min/max — see [[graft.lake.Snapshots]]). This is
+  * tables, driven by the version's [[graft.lake.Sidecar]] (one row per
+  * live file with per-column min/max). This is
   * the SQL half of `readVersionPruned`: the scan's PUSHED data filters are
   * evaluated against each file's committed stat ranges, and files whose
   * ranges provably cannot match are dropped before any byte is read — so
@@ -22,52 +22,6 @@ import org.apache.spark.sql.sources
   */
 object SidecarSkip {
 
-  /** Driver-side sidecar index. Driver-sized: one entry per live data
-    * file, the cardinality any table format's metadata layer carries
-    * (~10⁵ at 100 TB with 1 GB files).
-    *
-    *  - `ranges`: file (relative to `data/`) → column → (min, max), for
-    *    skipping;
-    *  - `bytes` / `rows`: exact per-file length and row count (recorded
-    *    by the commit from the files actually written), for planner
-    *    statistics and listing-free file indexes — absent for files whose
-    *    commits predate the recording.
-    */
-  case class StatsIndex(
-      ranges: Map[String, Map[String, (Any, Any)]],
-      bytes: Map[String, Long],
-      rows: Map[String, Long])
-
-  /** Load a sidecar into a driver-side index. Unreadable or absent
-    * sidecars yield None — the scan then skips nothing (conservative).
-    */
-  def load(spark: SparkSession, sidecarDir: String): Option[StatsIndex] =
-    scala.util.Try {
-      val df = spark.read.parquet(sidecarDir)
-      val cols = df.columns.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-        .filter(c => df.columns.contains(s"max_$c"))
-      val hasBytes = df.columns.contains("bytes")
-      val hasRows = df.columns.contains("rows")
-      val collected =
-        df.collect() // sidecar-sized: one row per data file, never data-sized
-      val ranges = collected.map { r =>
-        val per = cols.flatMap { c =>
-          val mn = r.getAs[Any](s"min_$c")
-          val mx = r.getAs[Any](s"max_$c")
-          if (mn == null || mx == null) None else Some(c -> (mn, mx))
-        }.toMap
-        r.getAs[String]("file") -> per
-      }.toMap
-      def longsOf(col: String, enabled: Boolean): Map[String, Long] =
-        if (!enabled) Map.empty
-        else collected.flatMap { r =>
-          val v = r.getAs[Any](col)
-          if (v == null) None
-          else Some(r.getAs[String]("file") -> v.asInstanceOf[Long])
-        }.toMap
-      StatsIndex(ranges, longsOf("bytes", hasBytes), longsOf("rows", hasRows))
-    }.toOption
-
   /** Relative path under the table's `data/` dir — the sidecar's file key
     * (partition segments are always `c=v`, so no later segment can equal
     * "data"; same contract as the stats derivation).
@@ -81,7 +35,7 @@ object SidecarSkip {
     * surviving files keep their bin-packed grouping (partitions only
     * shrink), empty partitions disappear, indices renumber densely.
     */
-  def prune(partitions: Array[InputPartition], stats: StatsIndex,
+  def prune(partitions: Array[InputPartition], stats: Sidecar,
       pushed: Array[sources.Filter]): Array[InputPartition] = {
     if (pushed.isEmpty) return partitions
     var idx = -1

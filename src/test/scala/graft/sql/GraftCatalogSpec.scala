@@ -250,6 +250,26 @@ class GraftCatalogSpec extends SparkTestBase {
       Snapshots.readVersion(spark, root, "t", 3L).filter($"grp" === 3).count())
   }
 
+  test("a partition column whose name Hive escapes on disk keeps its layout " +
+      "through SQL reads and INSERT INTO") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cat_esc").toString
+    import graft.lake.Snapshots
+    // `d:p` is spelled `d%3Ap=<v>` in file paths: the partition columns
+    // come from the manifest's layout, not from splitting a file path
+    Snapshots.commit(Seq((1L, 1), (2L, 2)).toDF("id", "d:p"), root, "t",
+      Seq("d:p"))
+    assert(Snapshots.liveFiles(spark, root, "t", 1L)
+      .forall(_.startsWith("d%3Ap=")))
+    GraftCatalog.install(spark, "graftesc", root)
+    // integer partition columns resolve as BIGINT (DPP-friendly keys)
+    assert(spark.table("graftesc.t").schema("d:p").dataType ===
+      org.apache.spark.sql.types.LongType)
+    spark.sql("INSERT INTO graftesc.t VALUES (3, 3)")
+    assert(Snapshots.manifest(spark, root, "t", 2L).partitionCols === Seq("d:p"))
+    assert(spark.table("graftesc.t").select("id").as[Long].collect().sorted
+      .toSeq === Seq(1L, 2L, 3L))
+  }
+
   test("versioned tables without a sidecar read every live file (conservative)") {
     val root = java.nio.file.Files.createTempDirectory("graft_cat_noskip").toString
     import graft.lake.Snapshots
