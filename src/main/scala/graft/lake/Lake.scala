@@ -27,10 +27,6 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   */
 object Lake {
 
-  /** Idempotent partitioned write with dynamic partition overwrite (I3 —
-    * the reference's month-to-date total refetch + overwrite,
-    * update/app.py:296-445): only partitions present in `df` are replaced.
-    */
   /** Cluster the rows by their partition values before a partitioned
     * write, so each partition directory receives files from as few tasks
     * as possible instead of (writer parallelism × partitions) shards —
@@ -39,10 +35,14 @@ object Lake {
     * written data, the standard trade every production lake writer makes
     * (AQE coalesces the post-shuffle side to sensible sizes).
     */
-  private def clusterByPartitions(df: DataFrame, partitionCols: Seq[String]) =
+  private[lake] def clusterByPartitions(df: DataFrame, partitionCols: Seq[String]) =
     if (partitionCols.isEmpty) df
     else df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
 
+  /** Idempotent partitioned write with dynamic partition overwrite (I3 —
+    * the reference's month-to-date total refetch + overwrite,
+    * update/app.py:296-445): only partitions present in `df` are replaced.
+    */
   def overwritePartitions(df: DataFrame, root: String, table: String,
       partitionCols: Seq[String]): Unit =
     clusterByPartitions(df, partitionCols).write

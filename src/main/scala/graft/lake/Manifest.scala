@@ -51,11 +51,11 @@ private[graft] case class Manifest(
   def addedAtOf: Map[String, Long] = files.zip(addedAt).toMap
 
   /** The partition columns: as recorded, else (a manifest that predates
-    * layout tracking) read off the first live file's `c=v/` segments. */
+    * layout tracking) read off the first live file's `c=v/` directories
+    * through [[PartitionPath]]. */
   def partitionLayout: Seq[String] =
     if (partitionCols.nonEmpty) partitionCols
-    else files.headOption.toSeq
-      .flatMap(_.split('/').dropRight(1).map(_.takeWhile(_ != '=')))
+    else files.headOption.toSeq.flatMap(PartitionPath.layout).map(_._1)
 
   /** `s` as this version's schema, partition columns LAST in layout
     * order: file-source reads emit them last, so the stored schema equals

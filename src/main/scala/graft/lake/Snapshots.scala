@@ -648,10 +648,11 @@ object Snapshots {
     commitImpl(df, root, table, partitionCols, statsCols, overwritePartitions = false,
       operation = "append")
 
-  /** [[commit]] with an EXPLICIT replaced-partition list (prefix strings,
-    * `c=v/` form): dynamic overwrite replaces partitions present in the
-    * frame — a partition a MERGE/DELETE emptied has no rows to announce
-    * itself with, so row-level verbs must name their replacements.
+  /** [[commit]] with an EXPLICIT replaced-partition list: prefixes in
+    * Spark's escaped `c=v/` spelling, built by [[PartitionPath]] (a raw
+    * `a:b` misses `p=a%3Ab/`). Dynamic overwrite replaces the partitions
+    * the commit wrote — a partition a MERGE/DELETE emptied has no rows to
+    * announce itself with, so row-level verbs must name their replacements.
     * `expectedBase` pins the read-modify-write verbs: the commit refuses
     * (retryable CME) when the table's latest version is no longer the one
     * the verb computed against — a concurrent commit landing in between
@@ -703,9 +704,9 @@ object Snapshots {
       operation = operation, expectedBase = expectedBase, changes = changes)
 
   /** Everything a commit attempt needs that does NOT depend on the
-    * version it lands on — the staged data files (written ONCE), their
-    * collected per-file stats, and the frame-derived replaced-partition
-    * list. A reconcile retry after a lost manifest race reuses all of it:
+    * version it lands on — the staged data files (written ONCE) and their
+    * collected per-file stats. A reconcile retry after a lost manifest
+    * race reuses all of it:
     * lazy vals memoize, so N lost races cost N metadata reconciles and
     * exactly one data write (the Delta/Iceberg stage-once shape — at
     * 100 TB commit sizes a lost race must never re-pay minutes of I/O).
@@ -724,12 +725,7 @@ object Snapshots {
         .flatMap(v => versionSchema(df.sparkSession, root, table, v))
         .filter(ColumnMapping.isMapped)
     val added: Seq[(String, Long)] = {
-      // cluster by partition values: one writer task per partition value
-      // instead of (parallelism × partitions) file shards — see
-      // Lake.clusterByPartitions for the scale rationale
-      val clustered =
-        if (partitionCols.isEmpty) df
-        else df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
+      val clustered = Lake.clusterByPartitions(df, partitionCols)
       val spelled = mappingSchema
         .map(ColumnMapping.toPhysical(clustered, _)).getOrElse(clustered)
       writeData(spelled, root, table, partitionCols)
@@ -743,20 +739,11 @@ object Snapshots {
     lazy val freshStats: Option[Sidecar] =
       stageFreshStats(df.sparkSession, root, table, added,
         statsCols.map(physStatsCol))
-    /** Distinct partition prefixes present in the frame (dynamic
-      * overwrite's replaced set) — data-derived, version-independent.
-      */
-    lazy val framePrefixes: Seq[String] =
-      df.select(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-        .distinct().collect().toSeq
-        .map { r =>
-          // a null partition value writes to Hive's default-partition dir,
-          // which this prefix match would silently miss — fail loudly
-          require((0 until partitionCols.length).forall(!r.isNullAt(_)),
-            s"Snapshots.commit: null value in partition columns $partitionCols")
-          partitionCols.zipWithIndex
-            .map { case (c, i) => s"$c=${r.get(i)}" }.mkString("", "/", "/")
-        }
+    /** The partition directories this commit wrote (dynamic overwrite's
+      * replaced set): read off the written files, so it is spelled
+      * exactly as on disk and costs no second run of the input plan. */
+    def writtenPrefixes: Seq[String] =
+      added.flatMap { case (p, _) => PartitionPath.dirOf(p) }.distinct
   }
 
   private def stage(df: DataFrame, root: String, table: String,
@@ -787,7 +774,13 @@ object Snapshots {
       .getOrElse(Manifest())
     val replacedPrefixes: Seq[String] =
       if (prevVersion.isEmpty || !overwritePartitions || replaceAllFiles) Seq.empty
-      else explicitReplaced.getOrElse(staged.framePrefixes)
+      else explicitReplaced.getOrElse(staged.writtenPrefixes)
+    // the row-level verbs' partition predicates never select null rows,
+    // so replacing Hive's default directory would lose them: every verb
+    // refuses it
+    replacedPrefixes.find(PartitionPath.holdsNull).foreach(p =>
+      throw new IllegalArgumentException(s"$operation into $table: null " +
+        s"value in partition columns ${partitionCols.mkString(", ")} ($p)"))
     val carried =
       if (replaceAllFiles) Seq.empty
       else prev.files.filterNot(file => replacedPrefixes.exists(file.startsWith))

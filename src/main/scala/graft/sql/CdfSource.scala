@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -91,13 +91,7 @@ object CdfSource {
     val sch = m.schema.getOrElse(throw new IllegalStateException(
       s"$table@v$latest has no manifest schema — the CDF stream needs " +
         "schema tracking (recommit through graft.lake.Snapshots)"))
-    val partCols = m.partitionLayout.toSet
-    StructType(sch.fields.map { f =>
-      if (partCols.contains(f.name) && (f.dataType == IntegerType ||
-          f.dataType == ShortType || f.dataType == ByteType))
-        f.copy(dataType = LongType)
-      else f
-    })
+    GraftCatalog.widenPartitionInts(sch, m.partitionLayout.toSet)
   }
 
   private[sql] def changeSchema(data: StructType): StructType =

@@ -376,9 +376,12 @@ class SnapshotInsertTable(
           // a static PARTITION (c=v, …) spec arrives as equality filters;
           // they must name a PREFIX of the partition layout, or the
           // replaced file set is not expressible as directory prefixes
+          // (V2 filters quote a name that needs it, such as `d:p`)
+          def name(a: String) = org.apache.spark.sql.catalyst.parser
+            .CatalystSqlParser.parseMultipartIdentifier(a).mkString(".")
           val eq = filters.toSeq.map {
-            case f.EqualTo(a, v) => a -> v
-            case f.EqualNullSafe(a, v) => a -> v
+            case f.EqualTo(a, v) => name(a) -> v
+            case f.EqualNullSafe(a, v) => name(a) -> v
             case other => throw new UnsupportedOperationException(
               s"INSERT OVERWRITE with non-equality partition filter $other " +
                 "— only a static PARTITION (c=v, …) spec is supported " +
@@ -389,8 +392,9 @@ class SnapshotInsertTable(
             throw new UnsupportedOperationException(
               s"INSERT OVERWRITE PARTITION must bind a prefix of the " +
                 s"partition layout $partitionCols (got ${eq.keySet})")
-          mode = Prefixes(Seq(
-            prefixCols.map(c => s"$c=${eq(c)}").mkString("", "/", "/")))
+          mode = Prefixes(Seq(graft.lake.PartitionPath.of(
+            SparkSession.active, StructType(prefixCols.map(tableSchema(_))),
+            prefixCols.map(eq))))
         }
         this
       }

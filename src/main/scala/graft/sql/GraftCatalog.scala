@@ -1,6 +1,7 @@
 package graft.sql
 
 import graft.lake.Sidecar
+import graft.sql.GraftCatalog.widenPartitionInts
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
@@ -97,31 +98,7 @@ class GraftCatalog extends TableCatalog {
     fs(p).exists(p)
   }
 
-  /** Build the table, resolving INTEGER partition-directory values as
-    * BIGINT. Directory names carry no declared width — Spark's inference
-    * guesses the narrowest int — and a narrow partition key under a
-    * bigint join key wraps the key in a cast, which
-    * `PushableColumnAndNestedColumn` (the extractor behind V2 runtime-
-    * filter translation) refuses: dynamic partition pruning silently dies.
-    * Widening is lossless and makes the common long-keyed join cast-free.
-    * Costs one extra schema inference per load (catalog-scale, not
-    * query-scale).
-    */
-  /** The BIGINT-widened schema for `probe`, or None when nothing widens
-    * (see [[widened]] for why integer partition-directory values must
-    * resolve as BIGINT).
-    */
-  private def widenPartitionInts(schema: org.apache.spark.sql.types.StructType,
-      partCols: Set[String]): org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
-    StructType(schema.fields.map { f =>
-      if (partCols.contains(f.name) &&
-          (f.dataType == IntegerType || f.dataType == ShortType ||
-            f.dataType == ByteType)) f.copy(dataType = LongType)
-      else f
-    })
-  }
-
+  /** The BIGINT-widened schema for `probe`, or None when nothing widens. */
   private def widenedSchema(probe: DppParquetTable)
       : Option[org.apache.spark.sql.types.StructType] = {
     val schema = widenPartitionInts(probe.schema,
@@ -771,6 +748,26 @@ private[sql] class EmptySnapshotTable(tableName: String, schema0:
 }
 
 object GraftCatalog {
+
+  /** `schema` with its INTEGER partition columns read as BIGINT.
+    * Directory names carry no declared width — Spark's inference guesses
+    * the narrowest int — and a narrow partition key under a bigint join
+    * key wraps the key in a cast, which `PushableColumnAndNestedColumn`
+    * (the extractor behind V2 runtime-filter translation) refuses:
+    * dynamic partition pruning silently dies. Widening is lossless and
+    * makes the common long-keyed join cast-free. Catalog reads and the
+    * CDF stream both type partition columns this way.
+    */
+  private[sql] def widenPartitionInts(schema: org.apache.spark.sql.types.StructType,
+      partCols: Set[String]): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
+    StructType(schema.fields.map { f =>
+      if (partCols.contains(f.name) &&
+          (f.dataType == IntegerType || f.dataType == ShortType ||
+            f.dataType == ByteType)) f.copy(dataType = LongType)
+      else f
+    })
+  }
 
   /** Per-version table caches (see [[GraftCatalog.versionedTable]]) —
     * shared across catalog instances, scoped per SESSION (two sessions can

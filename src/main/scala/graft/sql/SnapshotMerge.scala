@@ -1,8 +1,8 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.EliminateSubqueryAliases
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Cast, EqualTo, ExprId, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Cast, EqualTo, ExprId, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateStarAction}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -104,9 +104,6 @@ class SnapshotMergeRule extends Rule[LogicalPlan] {
     case other => other.resolved
   }
 
-  private def refuse(what: String): Nothing =
-    throw new UnsupportedOperationException(
-      s"MERGE INTO a Snapshots-versioned table does not support $what")
 }
 
 private[sql] object SnapshotMerge {
@@ -620,32 +617,8 @@ case class SnapshotMergeCommand(
       val oldTouched = full
         .filter(col("__graft_touch") && col("__graft_m"))
         .select(partitionCols.map(p => col(s"__graft_old_$p").as(p)): _*)
-      val touched = newTouched.unionByName(oldTouched).distinct()
-        .collect() // partition-value-sized (dimension data), never row-sized
-        .toSeq
-      val prefixes = touched.map { r =>
-        require((0 until partitionCols.length).forall(!r.isNullAt(_)),
-          s"MERGE into null partition value of $partitionCols")
-        partitionCols.zipWithIndex
-          .map { case (c, i) => s"$c=${r.get(i)}" }.mkString("", "/", "/")
-      }
-      if (prefixes.isEmpty) return Seq.empty // nothing matched or inserted
-      // literal predicate over the collected touched list (no broadcast
-      // machinery for dimension data); a merge touching thousands of
-      // partitions falls back to the broadcast semi join
-      val commitDf = DmlRebind
-        .partitionPredicate(partitionCols, touched)
-        .map(result.filter)
-        .getOrElse {
-          val touchedDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(touched, 1),
-            org.apache.spark.sql.types.StructType(
-              baseFields.filter(f => partitionCols.contains(f.name))))
-          result.join(broadcast(touchedDf), partitionCols, "left_semi")
-        }
-      Snapshots.commitReplacingPrefixes(commitDf, root, table,
-        partitionCols, statsCols, prefixes,
-        operation = "merge", expectedBase = Some(latest), changes = changes)
+      DmlRebind.commitTouched(result, newTouched.unionByName(oldTouched),
+        root, table, partitionCols, statsCols, "merge", latest, changes)
     }
     Seq.empty
   }

@@ -83,7 +83,7 @@ class StreamingSnapshotTable(
         // widened schema would silently evolve the stored manifest type
         // (and break later int-typed batch appends against the additive
         // check). De-widen: partition columns commit under their STORED
-        // type — values encode through dirValue as directory strings, so
+        // type — an int and its BIGINT widening spell one directory, so
         // the task-side rows (which carry the widened type) are unaffected.
         val commitSchema = StructType(info.schema().fields.map { f =>
           if (pCols.contains(f.name))
@@ -111,7 +111,7 @@ class StreamingSnapshotTable(
           with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
           // cluster epochs by partition value: one writer file per touched
           // partition instead of tasks × partitions shards (the same
-          // rationale as StagedCommit's repartition)
+          // rationale as Lake.clusterByPartitions)
           override def requiredDistribution()
               : org.apache.spark.sql.connector.distributions.Distribution =
             if (partitionCols.isEmpty)
@@ -139,17 +139,6 @@ private[sql] object SnapshotStreamingWrite {
     case StringType | IntegerType | LongType | ShortType | ByteType |
         BooleanType | DateType => true
     case _ => false
-  }
-
-  /** Hive directory value of an INTERNAL partition value (matches what
-    * `df.write.partitionBy` produces for the supported types, so streamed
-    * and batch-committed files share directory layouts).
-    */
-  private[sql] def dirValue(dt: DataType, v: Any): String = dt match {
-    case StringType => v.toString // UTF8String
-    case DateType => org.apache.spark.sql.catalyst.util.DateTimeUtils
-      .toJavaDate(v.asInstanceOf[Int]).toString
-    case _ => v.toString
   }
 }
 
@@ -184,8 +173,13 @@ private[sql] class SnapshotStreamingWrite(
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val owf = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+    // the batch writer's own directory rule, so streamed and
+    // batch-committed files share one layout
+    val dirOf = graft.lake.PartitionPath.speller(partitionCols.map(c =>
+      (c, writeSchema.fieldIndex(c), writeSchema(c).dataType)),
+      spark.sessionState.conf.sessionLocalTimeZone)
     new SnapshotStreamWriterFactory(stageBase, writeSchema, partitionCols,
-      dataSchema, owf, new ConfHolder(job.getConfiguration))
+      dataSchema, owf, new ConfHolder(job.getConfiguration), dirOf)
   }
 
   override def useCommitCoordinator(): Boolean = true
@@ -253,13 +247,13 @@ private[sql] class SnapshotStreamWriterFactory(
     stageBase: String, writeSchema: StructType, partitionCols: Seq[String],
     dataSchema: StructType,
     owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    confHolder: ConfHolder)
+    confHolder: ConfHolder, dirOf: InternalRow => String)
   extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new EpochDataWriter(s"$stageBase/$epochId", writeSchema, partitionCols,
-      dataSchema, owf, confHolder, epochId, partitionId)
+      dataSchema, owf, confHolder, dirOf, epochId, partitionId)
 }
 
 /** Task-side writer: routes each row to the OutputWriter of its partition
@@ -272,15 +266,12 @@ private[sql] class EpochDataWriter(
     epochDir: String, writeSchema: StructType, partitionCols: Seq[String],
     dataSchema: StructType,
     owf: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    confHolder: ConfHolder, epochId: Long, partitionId: Int)
+    confHolder: ConfHolder, dirOf: InternalRow => String, epochId: Long,
+    partitionId: Int)
   extends DataWriter[InternalRow] {
 
   import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
 
-  private val partFields = partitionCols.map { c =>
-    val i = writeSchema.fieldIndex(c)
-    (c, i, writeSchema.fields(i).dataType)
-  }
   private lazy val dataProj = UnsafeProjection.create(
     writeSchema.fields.zipWithIndex.toSeq
       .filterNot { case (f, _) => partitionCols.contains(f.name) }
@@ -297,25 +288,12 @@ private[sql] class EpochDataWriter(
   private val writers = scala.collection.mutable.LinkedHashMap
     .empty[String, (org.apache.spark.sql.execution.datasources.OutputWriter, String)]
 
-  private def dirKeyOf(row: InternalRow): String =
-    partFields.map { case (c, i, dt) =>
-      require(!row.isNullAt(i),
-        s"streaming write: null value in partition column $c")
-      val v = SnapshotStreamingWrite.dirValue(dt, row.get(i, dt))
-      s"${escape(c)}=${escape(v)}"
-    }.mkString("/")
-
-  // Hive path-name escaping (the ExternalCatalogUtils convention): the
-  // characters Hive refuses in partition directory segments are
-  // %-encoded, so streamed directories parse back exactly like
-  // df.write.partitionBy's
-  private def escape(s: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(s)
-
   override def write(row: InternalRow): Unit = {
-    val key = dirKeyOf(row)
-    val (w, _) = writers.getOrElseUpdate(key, {
-      val rel = (if (key.isEmpty) "" else s"$key/") +
+    val dir = dirOf(row)
+    require(!graft.lake.PartitionPath.holdsNull(dir),
+      s"streaming write: null value in partition column(s) of $dir")
+    val (w, _) = writers.getOrElseUpdate(dir, {
+      val rel = dir +
         f"part-$epochId-$partitionId%05d-${java.util.UUID.randomUUID()}" +
         owf.getFileExtension(attemptContext)
       (owf.newInstance(s"$epochDir/$rel", dataSchema, attemptContext), rel)

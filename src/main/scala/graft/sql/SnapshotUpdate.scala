@@ -171,6 +171,31 @@ private[sql] object DmlRebind {
         .map { case (c, i) => col(c) === lit(r.get(i)) }.reduce(_ && _))
       .reduce(_ || _))
   }
+
+  /** UPDATE's and MERGE's partition-pruned copy-on-write commit, pinned
+    * to version `base`: the distinct `touched` partition tuples (layout
+    * order; partition-value-sized, never row-sized) are collected and
+    * spelled through [[graft.lake.PartitionPath]], and exactly those
+    * partitions are replaced by `result`'s rows in them (a literal
+    * [[partitionPredicate]], past its cap a broadcast semi join). No
+    * touched partition publishes nothing. */
+  def commitTouched(result: DataFrame, touched: DataFrame, root: String,
+      table: String, partitionCols: Seq[String], statsCols: Seq[String],
+      operation: String, base: Long, changes: Option[DataFrame]): Unit = {
+    val spark = result.sparkSession
+    val rows = touched.distinct().collect().toSeq
+    if (rows.isEmpty) return
+    val prefixes = rows.map(r =>
+      graft.lake.PartitionPath.of(spark, touched.schema, r.toSeq))
+    val commitDf = partitionPredicate(partitionCols, rows)
+      .map(result.filter)
+      .getOrElse(result.join(broadcast(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), touched.schema)),
+        partitionCols, "left_semi"))
+    graft.lake.Snapshots.commitReplacingPrefixes(commitDf, root, table,
+      partitionCols, statsCols, prefixes, operation = operation,
+      expectedBase = Some(base), changes = changes)
+  }
 }
 
 /** `UPDATE graft.t SET … [WHERE …]` over a Snapshots-versioned table —
@@ -545,7 +570,7 @@ case class SnapshotUpdateCommand(
       // partition-pruned copy-on-write: hit rows' OLD partitions, plus
       // their NEW partitions when the SET list rewrites a partition column
       val oldTouched = base.filter(hit).select(partitionCols.map(col): _*)
-      val touchedDf0 =
+      val touched =
         if (partitionCols.exists(assignOf.contains)) {
           // rows are already hit-filtered, so the assignment applies
           // unconditionally (no `when(hit, …)` — a predicate subquery may
@@ -557,33 +582,8 @@ case class SnapshotUpdateCommand(
           }
           oldTouched.unionByName(base.filter(hit).select(newPart: _*))
         } else oldTouched
-      val touched = touchedDf0.distinct()
-        .collect() // partition-value-sized (dimension data), never row-sized
-        .toSeq
-      if (touched.isEmpty) return Seq.empty // predicate matched nothing
-      val prefixes = touched.map { r =>
-        require((0 until partitionCols.length).forall(!r.isNullAt(_)),
-          s"UPDATE into null partition value of $partitionCols")
-        partitionCols.zipWithIndex
-          .map { case (c, i) => s"$c=${r.get(i)}" }.mkString("", "/", "/")
-      }
-      // literal predicate over the collected touched list (prunes the
-      // re-scan at the file index when no partition col was assigned);
-      // thousands of touched partitions fall back to the broadcast semi
-      val commitDf = DmlRebind
-        .partitionPredicate(partitionCols, touched)
-        .map(updated.filter)
-        .getOrElse {
-          val touchedDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(touched, 1),
-            org.apache.spark.sql.types.StructType(
-              base.schema.fields.filter(f => partitionCols.contains(f.name))))
-          updated.join(broadcast(touchedDf), partitionCols, "left_semi")
-        }
-      Snapshots.commitReplacingPrefixes(commitDf, root, table,
-        partitionCols, statsCols, prefixes,
-        operation = "update", expectedBase = Some(latest),
-        changes = changes)
+      DmlRebind.commitTouched(updated, touched, root, table,
+        partitionCols, statsCols, "update", latest, changes)
     }
     Seq.empty
   }

@@ -103,6 +103,18 @@ class ManifestSpec extends AnyFunSuite {
     assert(failure("""{"files": [] """).contains("not valid JSON"))
   }
 
+  test("a pre-tracking manifest's layout reads escaped partition names " +
+      "through the partition-path rule") {
+    assert(Manifest(files = Seq("d%3Ap=1/part-0.parquet")).partitionLayout ===
+      Seq("d:p"))
+    assert(Manifest(files = Seq("y=2020/m=1/a.parquet")).partitionLayout ===
+      Seq("y", "m"))
+    assert(Manifest(files = Seq("a.parquet")).partitionLayout === Nil)
+    // a recorded layout wins over the file paths
+    assert(Manifest(partitionCols = Seq("d:p"),
+      files = Seq("d%3Ap=1/a.parquet")).partitionLayout === Seq("d:p"))
+  }
+
   test("next carries what describes the table and resets what describes " +
       "one version") {
     val full = expected.toMap.apply("tricky_schema").copy(
