@@ -126,12 +126,14 @@ object Bench {
     def secs(m: Seq[(String, Double)]) =
       JObject(m.map { case (k, v) => k -> JDouble(v) }: _*)
     // per-trial detail (duration, success or the failure's reason, 1-min
-    // loadavg, epoch sec) so a polluted or broken capture is diagnosable
-    // from BENCH_local.json without a rerun
+    // loadavg, epoch sec, executions/jobs/stages) so a polluted or broken
+    // capture is diagnosable from BENCH_local.json without a rerun
     val trialsJson = JObject(queryList.map { case (name, _) =>
       name -> JArray(samples(name).toList.map { tr =>
         JObject(List("sec" -> JDouble(r3(tr.sec)), "ok" -> JBool(tr.ok),
-          "load" -> JDouble(tr.load), "ts" -> JLong(tr.ts)) ++
+          "load" -> JDouble(tr.load), "ts" -> JLong(tr.ts),
+          "executions" -> JLong(tr.layers.executions),
+          "jobs" -> JLong(tr.layers.jobs), "stages" -> JLong(tr.layers.stages)) ++
           tr.error.map(e => "error" -> JString(e)))
       })
     }: _*)

@@ -551,10 +551,10 @@ object Snapshots {
       from: String, to: String): Long = {
     val (latest, prev, prevSchema) =
       latestWithSchema(spark, root, table, "renaming columns")
-    val field = prevSchema.fields.find(_.name == from).getOrElse(
+    if (!prevSchema.fieldNames.contains(from))
       throw new IllegalArgumentException(
         s"renameColumn: no column $from in $table " +
-          s"(columns: ${prevSchema.fieldNames.mkString(", ")})"))
+          s"(columns: ${prevSchema.fieldNames.mkString(", ")})")
     require(!prev.partitionCols.contains(from),
       s"renameColumn: $from is a partition column of $table — its " +
         "physical name is baked into every directory path; rewrite the " +
@@ -824,7 +824,7 @@ object Snapshots {
       overwritePartitions: Boolean,
       replaceAllFiles: Boolean = false,
       explicitReplaced: Option[Seq[String]] = None,
-      operation: String = "commit",
+      operation: String,
       expectedBase: Option[Long] = None,
       changes: Option[DataFrame] = None): Long = {
     val staged = stage(df, root, table, partitionCols, statsCols)

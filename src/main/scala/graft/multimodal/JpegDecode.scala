@@ -65,7 +65,7 @@ object JpegDecode {
     def bit(): Int = {
       if (nbits == 0) {
         if (pos >= b.length) throw Truncated
-        var v = b(pos) & 0xff; pos += 1
+        val v = b(pos) & 0xff; pos += 1
         if (v == 0xff) {
           if (pos >= b.length) throw Truncated
           val m = b(pos) & 0xff
@@ -409,7 +409,7 @@ object JpegDecode {
   private def decodeScan(b: Array[Byte], start: Int, width: Int, height: Int,
       comps: Array[Component], qt: Array[Array[Int]],
       dcT: Array[Huff], acT: Array[Huff], restartInterval: Int,
-      precision: Int = 8): Option[PixelDecode.Image] = {
+      precision: Int): Option[PixelDecode.Image] = {
     val half = (1 << (precision - 1)).toDouble
     val hMax = comps.map(_.h).max
     val vMax = comps.map(_.v).max
@@ -736,7 +736,7 @@ object JpegDecode {
   private def decodeScanArith(b: Array[Byte], start: Int, width: Int,
       height: Int, comps: Array[Component], qt: Array[Array[Int]],
       dcCondL: Array[Int], dcCondU: Array[Int], acKx: Array[Int],
-      restartInterval: Int, precision: Int = 8): Option[PixelDecode.Image] =
+      restartInterval: Int, precision: Int): Option[PixelDecode.Image] =
     decodeScanArithPlanes(b, start, width, height, comps, qt, dcCondL,
       dcCondU, acKx, restartInterval, precision, differential = false)
       .flatMap { case (planes, planeW, hMax, vMax, _) =>
@@ -927,7 +927,7 @@ object JpegDecode {
     */
   private def assemble(width: Int, height: Int, comps: Array[Component],
       planes: Array[Array[Double]], planeW: Array[Int], hMax: Int,
-      vMax: Int, precision: Int = 8): Option[PixelDecode.Image] = {
+      vMax: Int, precision: Int): Option[PixelDecode.Image] = {
     val maxV = (1 << precision) - 1
     val half = (1 << (precision - 1)).toDouble
     val nch = comps.length
@@ -1166,7 +1166,7 @@ object JpegDecode {
   /** Dequantize the accumulated coefficient store, IDCT every block on
     * the padded grid, and hand the planes to the shared assembler. */
   private def reconstructProgressive(st: ProgState, comps: Array[Component],
-      qt: Array[Array[Int]], width: Int, height: Int, precision: Int = 8)
+      qt: Array[Array[Int]], width: Int, height: Int, precision: Int)
       : Option[PixelDecode.Image] = {
     val half = (1 << (precision - 1)).toDouble
     val planeW = comps.indices.map(ci => st.padW(ci) * 8).toArray

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -50,7 +50,6 @@ object Multimodal {
     * arbitrary native/external calls allowed inside the partition).
     */
   def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     val enc = org.apache.spark.sql.Encoders.row(featureSchema)
     media.select(col("media_id"), col("payload"))
       .mapPartitions { rows =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.ExactAgg
-import graft.text.{Chunker, Mda, Readability, Sentiment, WordLists}
+import graft.text.{Mda, Readability, Sentiment, WordLists}
 
 /** Sentiment/text-pipeline queries (T1-T6, A9) + remaining §2 operator
   * coverage (A5/A6/A12 aggregate family, W8 ranking family, S8 CSV source,

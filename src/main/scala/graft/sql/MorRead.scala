@@ -90,7 +90,7 @@ object MorRead {
       .toSeq.sortBy(_._1)
       .flatMap { case (_, fs) =>
         val out = scala.collection.mutable.ArrayBuffer.empty[FilePartition]
-        var cur = scala.collection.mutable.ArrayBuffer.empty[
+        val cur = scala.collection.mutable.ArrayBuffer.empty[
           org.apache.spark.sql.execution.datasources.PartitionedFile]
         var bytes = 0L
         fs.sortBy(-_.length).foreach { f =>

@@ -6,45 +6,31 @@ import graft.lake.Lake
 import graft.master.SecurityMaster
 
 /** The symbol-level read path (§3.3 — reference storage/clients/ticks.py):
-  * `getDailyTicks(symbol, range)` resolves the symbol to security_id(s) via
-  * the temporal master (broadcast as-of join, with fuzzy fallback), then
-  * reads the lake with partition pruning on security_id/year and a date
-  * range filter.
+  * `getDailyTicks` and `getMinuteTicks` resolve the symbol on the driver
+  * against the temporal master, then scan the lake filtered by literal
+  * security_ids (PartitionFilters) and date bounds (pushed filters): the
+  * read plan holds no join. Fuzzy bulk (symbol, day) resolution is
+  * [[SecurityMaster.resolve]] (`resolveSymbols`).
   *
   * The reference's hand-rolled month routing and (symbol, year) caches
-  * (ticks.py:130-171,271-292) dissolve into Catalyst partition pruning +
-  * the broadcast dimension.
+  * (ticks.py:130-171,271-292) dissolve into Catalyst partition pruning.
   */
 class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
 
-  /** Bars for (symbol, [start, end]): resolved per-day via the master so a
-    * rename boundary inside the range routes each day to the security that
-    * carried the symbol then — plus fuzzy resolution for renamed symbols
-    * (reference get_security_id auto_resolve semantics).
+  /** Bars for (symbol, [start, end]), routed per day through the master: a
+    * rename boundary inside the range reads each day from the security
+    * that carried the symbol then. Columns: security_id, the stored
+    * columns, then symbol; rows ordered by date.
     */
   def getDailyTicks(symbol: String, start: String, end: String): DataFrame = {
-    val s = lit(start).cast("date")
-    val e = lit(end).cast("date")
-    // Resolve the symbol against every master interval it overlaps with.
-    val probe = spark.range(1).select(
-      lit(symbol).as("symbol"),
-      s.as("range_start"), e.as("range_end"))
-    val m = master.select(
-      col("symbol").as("m_symbol"), col("security_id"),
-      col("start_date"), col("end_date"))
-    val sids = probe.join(
-        broadcast(m),
-        col("symbol") === col("m_symbol") &&
-          col("start_date") <= col("range_end") &&
-          col("end_date") >= col("range_start"))
-      .select(col("security_id"),
-        greatest(col("start_date"), col("range_start")).as("eff_start"),
-        least(col("end_date"), col("range_end")).as("eff_end"))
-
+    val inRange = resolve(symbol, start, end)
+      .map { case (sid, lo, hi) =>
+        col("security_id") === sid && col("date").between(lit(lo), lit(hi)) }
+      .reduceOption(_ || _).getOrElse(lit(false))
     val ticks = Lake.read(spark, root, "daily_ticks")
-    ticks.join(broadcast(sids), Seq("security_id"))
-      .filter(col("date").between(col("eff_start"), col("eff_end")))
-      .drop("eff_start", "eff_end")
+    ticks.filter(inRange)
+      .select(col("security_id") +:
+        ticks.columns.filterNot(_ == "security_id").toSeq.map(col): _*)
       .withColumn("symbol", lit(symbol))
       .orderBy(col("date"))
   }
@@ -100,9 +86,8 @@ class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
     * scan as static PartitionFilters on all four partition columns —
     * the {sid}/{Y}/{MM}/{DD} directory walk with no IO outside the day.
     *
-    * The sid lookup is a dimension-sized driver collect — the exact
-    * lookup the reference caches driver-side per (symbol, year); the
-    * master is broadcast-scale by construction.
+    * The sid lookup is the driver-side `resolve` `getDailyTicks` uses,
+    * over the one day — the lookup the reference caches per (symbol, year).
     *
     * Bars come back in stored ET wall-clock (`timestamp_ntz`, see
     * [[MinuteBars]]): a spring-forward day has no 02:xx rows and a
@@ -111,18 +96,28 @@ class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
     */
   def getMinuteTicks(symbol: String, day: String): DataFrame = {
     val d = java.time.LocalDate.parse(day)
-    val sids = master
-      .filter(col("symbol") === symbol &&
-        col("start_date") <= lit(day).cast("date") &&
-        col("end_date") >= lit(day).cast("date"))
-      .select(col("security_id").cast("long"))
-      .collect().map(_.getLong(0)).toSeq
+    val sids = resolve(symbol, day, day).map(_._1)
     Lake.read(spark, root, TicksClient.MinuteTable)
       .filter(col("security_id").isin(sids: _*) &&
         col("year") === d.getYear && col("month") === d.getMonthValue &&
         col("day") === d.getDayOfMonth)
       .withColumn("symbol", lit(symbol))
       .orderBy(col("ts"))
+  }
+
+  /** (security_id, first day, last day) of each master interval carrying
+    * `symbol`, clipped to [start, end]. Dimension-sized driver collect (the
+    * master is broadcast-scale), run when the read is built. */
+  private def resolve(symbol: String, start: String, end: String)
+      : Seq[(Long, Any, Any)] = {
+    val s = lit(start).cast("date")
+    val e = lit(end).cast("date")
+    master
+      .filter(col("symbol") === symbol &&
+        col("start_date") <= e && col("end_date") >= s)
+      .select(col("security_id").cast("long"),
+        greatest(col("start_date"), s), least(col("end_date"), e))
+      .collect().toSeq.map(r => (r.getLong(0), r.get(1), r.get(2)))
   }
 }
 

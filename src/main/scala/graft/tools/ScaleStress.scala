@@ -144,7 +144,7 @@ object ScaleStress {
     "q149_triangles", "q152_assoc_rules", "q154_kcore")
 
   private def ensureBlowup(s: SparkSession, srcDir: String, factor: Int,
-      withRel: Boolean, withGraph: Boolean = false): String = {
+      withRel: Boolean, withGraph: Boolean): String = {
     val dir = s"/tmp/graft_scale_x$factor"
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(s"$dir/_BLOWUP_DONE")
@@ -678,7 +678,7 @@ object ScaleStress {
     // is the committed evidence), and it must never go super-linear.
     val runBySource = sys.env.getOrElse("SPARK_GRAFT_DML_BYSOURCE", "0") != "0"
     for (f <- scales if runBySource) {
-      import org.apache.spark.sql.functions.{col, lit}
+      import org.apache.spark.sql.functions.col
       val n = 5000000L * f
       val root = s"/tmp/graft_scale_dmlbs_${math.abs(srcDir.hashCode)}_x$f"
       org.apache.hadoop.fs.FileSystem.getLocal(

@@ -85,6 +85,51 @@ class TicksClientSpec extends SparkTestBase {
     assert(got.select("close").as[Double].collect().toSeq === Seq(12.0, 13.0))
   }
 
+  private def sidOf(symbol: String): Long =
+    master.filter($"symbol" === symbol).select("security_id").as[Long].head()
+
+  test("a symbol reused by two securities reads each era from its own security") {
+    val (metaSid, otherSid) = (sidOf("META"), sidOf("ZZZ"))
+    val reused = Seq(
+      ("REUSED", otherSid, d("2022-01-01"), d("2023-06-30")),
+      ("REUSED", metaSid, d("2023-07-01"), d("2024-12-31")))
+      .toDF("symbol", "security_id", "start_date", "end_date")
+    val got = new TicksClient(spark, root, reused)
+      .getDailyTicks("REUSED", "2023-06-01", "2024-02-01")
+      .select($"security_id".cast("long"), $"date", $"close")
+      .as[(Long, Date, Double)].collect().toSeq
+      .map { case (sid, dt, c) => (sid, dt.toString, c) }
+    assert(got === Seq(
+      (otherSid, "2023-06-30", 99.0),
+      (metaSid, "2023-07-03", 12.0), (metaSid, "2024-01-05", 13.0)))
+  }
+
+  test("columns are security_id, the stored columns, then symbol") {
+    assert(client.getDailyTicks("META", "2023-06-01", "2024-02-01").columns.toSeq ===
+      Seq("security_id", "date", "close", "year", "symbol"))
+  }
+
+  test("an unknown symbol or a range outside every interval reads no rows") {
+    val matching = client.getDailyTicks("META", "2023-06-01", "2024-02-01")
+    for (empty <- Seq(
+        client.getDailyTicks("NOPE", "2023-06-01", "2024-02-01"),
+        client.getDailyTicks("META", "2020-01-01", "2020-12-31"))) {
+      assert(empty.schema === matching.schema)
+      assert(empty.count() === 0)
+    }
+  }
+
+  test("a daily read scans literal partitions, with no join in the plan") {
+    val plan = client.getDailyTicks("META", "2023-06-01", "2024-02-01")
+      .queryExecution.executedPlan.toString
+    assert(raw"PartitionFilters: \[[^\]]*\(security_id#\d+ = ${sidOf("META")}\)".r
+      .findFirstIn(plan).nonEmpty, plan)
+    assert(raw"PushedFilters: \[[^\]]*GreaterThanOrEqual\(date,2023-07-01\), LessThanOrEqual\(date,2024-02-01\)".r
+      .findFirstIn(plan).nonEmpty, plan)
+    assert(!plan.contains("dynamicpruningexpression"), plan)
+    assert(!plan.contains("BroadcastHashJoin"), plan)
+  }
+
   test("partition pruning: year read plans PartitionFilters") {
     val metaSid = master.filter($"symbol" === "META")
       .select("security_id").as[Long].head()
