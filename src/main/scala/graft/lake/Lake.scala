@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
@@ -44,7 +45,7 @@ object Lake {
     * update/app.py:296-445): only partitions present in `df` are replaced.
     */
   def overwritePartitions(df: DataFrame, root: String, table: String,
-      partitionCols: Seq[String]): Unit =
+      partitionCols: Seq[String]): Unit = writing(df.sparkSession, root, table) {
     clusterByPartitions(df, partitionCols).write
       .mode("overwrite")
       // per-write option, NOT a session conf mutation: other writers in the
@@ -52,18 +53,74 @@ object Lake {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(s"$root/$table")
+  }
 
   /** Append-only write (U1 concat-at-rest). */
   def appendPartitions(df: DataFrame, root: String, table: String,
-      partitionCols: Seq[String]): Unit =
+      partitionCols: Seq[String]): Unit = writing(df.sparkSession, root, table) {
     clusterByPartitions(df, partitionCols).write
       .mode("append").partitionBy(partitionCols: _*).parquet(s"$root/$table")
+  }
 
-  /** Partition-pruned read (S9/§3.3): pass partition-column predicates so the
-    * scan's PartitionFilters prune directories before any IO.
+  /** Whole-table read (S9/§3.3). Every call lists the table's whole
+    * directory tree and infers its schema from a footer before the
+    * DataFrame exists; partition-column predicates then prune the
+    * directories the scan opens (PartitionFilters), not the listing. A
+    * caller that knows its partitions reads them with [[readDirs]].
     */
   def read(spark: SparkSession, root: String, table: String): DataFrame =
     spark.read.parquet(s"$root/$table")
+
+  /** Only the given partition directories of `table` (`c=v/d=w`, relative
+    * to the table, spelled by [[PartitionPath]]), with `basePath` set so
+    * the partition columns read as in [[read]]. The schema — names, types
+    * and order exactly [[read]]'s — comes from a per-table cache, so the
+    * read lists only `dirs` and infers nothing. No directory gives an
+    * empty frame of that schema.
+    */
+  def readDirs(spark: SparkSession, root: String, table: String,
+      dirs: Seq[String]): DataFrame = {
+    val schema = cachedSchema(spark, root, table)
+    if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).option("basePath", s"$root/$table")
+      .parquet(dirs.map(d => s"$root/$table/${d.stripSuffix("/")}"): _*)
+  }
+
+  /** Qualified table path → (the table directory's mtime when the schema
+    * was taken, [[read]]'s schema). An entry is dropped by this JVM's
+    * writes through `Lake` and retaken when the directory's mtime moves:
+    * every Spark write of the table stages under the table directory
+    * (`_temporary`, `.spark-staging-*`), so another writer's new partition
+    * or column moves it too. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
+
+  private def tablePath(spark: SparkSession, root: String, table: String) = {
+    val p = new Path(s"$root/$table")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(p))
+  }
+
+  private def cachedSchema(spark: SparkSession, root: String,
+      table: String): StructType = {
+    val (fs, path) = tablePath(spark, root, table)
+    // the mtime is taken BEFORE the schema: a write landing in between
+    // leaves an older stamp, so the next read retakes the schema
+    scala.util.Try(fs.getFileStatus(path).getModificationTime).toOption
+      .fold(read(spark, root, table).schema) { mtime => // absent: read's error
+        val key = path.toString
+        Option(schemas.get(key)).filter(_._1 == mtime).map(_._2).getOrElse {
+          val schema = read(spark, root, table).schema
+          schemas.put(key, (mtime, schema))
+          schema
+        }
+      }
+  }
+
+  /** Run a write of `table`, then drop its cached schema. */
+  private def writing[T](spark: SparkSession, root: String, table: String)(
+      body: => T): T =
+    try body finally schemas.remove(tablePath(spark, root, table)._2.toString)
 
   /** I5 — year-end compaction: rewrite the given (entity, year) partitions
     * as one file each (the reference's 12-monthlies → history.parquet,
@@ -76,7 +133,7 @@ object Lake {
     * merge buckets).
     */
   def compactYears(spark: SparkSession, root: String, table: String,
-      years: Seq[Int], maxRecordsPerFile: Long = 0L): Unit = {
+      years: Seq[Int], maxRecordsPerFile: Long = 0L): Unit = writing(spark, root, table) {
     val df = read(spark, root, table).filter(col("year").isin(years: _*))
     // Cluster BY KEY here and tell overwritePartitions not to re-cluster:
     // its own repartition would collapse with this one (Catalyst keeps

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import java.nio.charset.StandardCharsets
@@ -388,7 +388,7 @@ object Snapshots {
     * WRITTEN via `_metadata` — never trusted from the writer's plan. One
     * output row per file.
     */
-  private def deriveFileStats(spark: SparkSession, dir: String,
+  private[lake] def deriveFileStats(spark: SparkSession, dir: String,
       relFiles: Seq[String], statsCols: Seq[String]): DataFrame = {
     val aggs = count(lit(1)).as("rows") +: statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
@@ -402,45 +402,58 @@ object Snapshots {
   }
 
   /** The per-file stats of a commit's ADDED files, computed ONCE at stage
-    * time and collected to driver rows (one row per added file —
-    * manifest-sized): a reconcile retry after a lost race must be
-    * METADATA-ONLY, never re-derive stats from data. With `statsCols`
-    * empty the rows come straight from the parquet FOOTERS (exact record
-    * counts, a driver metadata op — no Spark job at all); with stats
-    * columns requested, one aggregate job over just the added files
-    * derives min/max (from the files actually written, never the writer's
-    * plan).
+    * time as driver rows (one row per added file — manifest-sized): a
+    * reconcile retry after a lost race must be METADATA-ONLY, never
+    * re-derive stats from data. One driver pass over the added files'
+    * Parquet footers ([[FooterStats]], concurrent on [[graft.DriverPool]])
+    * gives each file's exact row count and the min/max of every stats
+    * column the footer answers exactly (long, int, date, string, boolean),
+    * with no Spark job. Only the other stats columns — timestamps,
+    * floating point, decimals, partition columns, a footer without
+    * min/max — are derived from the files actually written by one
+    * aggregate over the added files ([[deriveFileStats]]), never from the
+    * writer's plan. A footer that cannot be read fails the commit before
+    * anything is published.
     */
-  private def stageFreshStats(spark: SparkSession, root: String, table: String,
+  private[lake] def stageFreshStats(spark: SparkSession, root: String, table: String,
       added: Seq[(String, Long)], statsCols: Seq[String]): Option[Sidecar] = {
+    import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
     if (added.isEmpty) return None
     val dir = dataDir(root, table)
-    if (statsCols.isEmpty) {
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val f = fs(spark, root)
-      val schema = StructType(Seq(StructField("file", StringType),
-        StructField("rows", LongType), StructField("bytes", LongType)))
-      // footer opens are independent ~ms-scale I/O — read them
-      // concurrently (a partitioned commit lands tens of files; serial
-      // footer reads were a visible per-commit constant)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val rows = Await.result(Future.traverse(added) { case (p, bytes) =>
-        Future {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(s"$dir/$p"), f.getConf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          val n = try r.getRecordCount finally r.close()
-          org.apache.spark.sql.Row(p, n, bytes)
-        }
-      }, scala.concurrent.duration.Duration.Inf)
-      Some(Sidecar(schema, rows))
-    } else {
-      import spark.implicits._
-      val stats = deriveFileStats(spark, dir, added.map(_._1), statsCols)
-        .join(broadcast(added.toDF("file", "bytes")), Seq("file"), "left")
-      Some(Sidecar(stats.schema, stats.collect().toSeq)) // one row per added file
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footers = graft.DriverPool.map(spark, added) { case (p, _) =>
+      FooterStats.read(conf, new Path(s"$dir/$p"), statsCols) }
+    // a column comes from the footers when every file's footer answers it
+    // with one type
+    val footerType: Seq[Option[DataType]] = statsCols.indices.map { i =>
+      val types = footers.map(_.bounds(i).map(_._1))
+      if (types.forall(_.isDefined) && types.distinct.size == 1) types.head
+      else None
     }
+    val fallback = statsCols.zip(footerType).collect { case (c, None) => c }
+    val (aggSchema, aggRows) =
+      if (fallback.isEmpty) (StructType(Nil), Map.empty[String, Row])
+      else {
+        val agg = deriveFileStats(spark, dir, added.map(_._1), fallback)
+        // `_metadata.file_path` is URL-encoded: the file under `p=a%3Ab/`
+        // reads `p=a%253Ab/`
+        (agg.schema, agg.collect().map(r =>
+          new java.net.URI(r.getString(0)).getPath -> r).toMap)
+      }
+    val boundCols = statsCols.zip(footerType).flatMap { case (c, t) =>
+      Seq(s"min_$c", s"max_$c").map(n =>
+        StructField(n, t.getOrElse(aggSchema(n).dataType))) }
+    val schema = StructType(StructField("file", StringType) +:
+      StructField("rows", LongType) +: boundCols :+ StructField("bytes", LongType))
+    Some(Sidecar(schema, added.zip(footers).map { case ((p, bytes), ft) =>
+      val bounds = statsCols.indices.flatMap { i => ft.bounds(i) match {
+        case Some((_, mn, mx)) => Seq(mn, mx)
+        case None =>
+          val r = aggRows.get(p) // absent: the file holds no rows
+          Seq("min_", "max_").map(m => r.map(_.getAs[Any](m + statsCols(i))).orNull)
+      }}
+      Row.fromSeq((p +: ft.rows +: bounds) :+ bytes)
+    }))
   }
 
   /** Provision an EMPTY versioned table: publish v1 as a zero-file
@@ -1281,6 +1294,8 @@ object Snapshots {
       full.repartitionByRange(numFiles, partitionCols.map(col) ++ clusterKeys: _*),
       root, table, partitionCols)
     val version = latest + 1
+    // stats derive before the publish: an unreadable footer leaves no version
+    val freshStats = stageFreshStats(spark, root, table, added, statsCols)
     beforePublish()
     // the rewrite materializes the merged schema into every file; the new
     // manifest carries it forward. Delete vectors are folded in (the
@@ -1295,8 +1310,7 @@ object Snapshots {
         files = files, addedAt = files.map(_ => version), deletes = Nil,
         schema = Some(ColumnMapping.unmapped(full.schema)),
         partitionCols = partitionCols, droppedPhysical = Nil))
-    Sidecar.publish(spark, root, table, version, files,
-      stageFreshStats(spark, root, table, added, statsCols), None)
+    Sidecar.publish(spark, root, table, version, files, freshStats, None)
     version
   }
 

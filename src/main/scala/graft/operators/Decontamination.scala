@@ -68,29 +68,19 @@ object Decontamination {
       embIdCol: String = "vec_id", vecCol: String = "embedding",
       routeThreshold: Int = RouteThreshold): Unit = {
     // The three index legs are INDEPENDENT jobs (guide §2.6: actions are
-    // only sequential because the driver calls them sequentially) — submit
-    // them from a small pool so the shingle leg's tail back-fills with the
-    // vector/centroid legs instead of leaving the cluster idle.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val legs = Seq(
-      Future {
-        Dedup.hashedShinglePairs(evalDocs, textCol, idCol, k)
-          .select(col("sh")).distinct()
-          .write.mode(SaveMode.Overwrite).parquet(shinglesDir(root))
-      },
-      Future {
-        assign(evalEmb, centroids, embIdCol, vecCol, routeThreshold)
-          .select(col("cell"), col(embIdCol).as("eval_id"),
-            col(vecCol).as("eval_vec"))
-          .write.mode(SaveMode.Overwrite).parquet(vectorsDir(root))
-      },
-      Future {
-        centroids.write.mode(SaveMode.Overwrite).parquet(centroidsDir(root))
-      })
-    Await.result(Future.sequence(legs), Duration.Inf)
+    // only sequential because the driver calls them sequentially) — run
+    // them together so the shingle leg's tail back-fills with the
+    // vector/centroid legs instead of leaving the cluster idle. Every leg
+    // is awaited before a failure surfaces: none is still writing then.
+    graft.DriverPool.all(evalDocs.sparkSession)(
+      () => Dedup.hashedShinglePairs(evalDocs, textCol, idCol, k)
+        .select(col("sh")).distinct()
+        .write.mode(SaveMode.Overwrite).parquet(shinglesDir(root)),
+      () => assign(evalEmb, centroids, embIdCol, vecCol, routeThreshold)
+        .select(col("cell"), col(embIdCol).as("eval_id"),
+          col(vecCol).as("eval_vec"))
+        .write.mode(SaveMode.Overwrite).parquet(vectorsDir(root)),
+      () => centroids.write.mode(SaveMode.Overwrite).parquet(centroidsDir(root)))
   }
 
   /** Probe one training batch against the stored index. `batchDocs`

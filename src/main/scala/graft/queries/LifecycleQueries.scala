@@ -96,28 +96,31 @@ object LifecycleQueries {
         .weekdaySpine(s, asOf.toString, asOf.toString).count() == 1
       // 3. month-to-date ticks refresh only on trading days (I3 overwrite).
       // The refresh touches ONLY daily_ticks while steps 4-6 touch
-      // fundamental/sentiment — independent jobs, so submit it concurrently
-      // and let its tail back-fill with the filings chain (guide §2.6: the
-      // day's steps are only sequential where they truly depend).
-      import scala.concurrent.{Await, Future}
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val ticksF = Future { if (trading) Jobs.updateDailyTicks(s, slice, root) }
-      // 4. recent-filings probe → hit securities (7-day lookback)
-      val hits = filed.select(sid.as("security_id")).distinct()
-      // 5. fundamental republish for hit securities (partition overwrite —
-      // idempotent; hits is dimension-sized so the join broadcasts)
-      val fund = orders.select(sid.as("security_id"),
-          col("o_totalprice").as("p"))
-        .join(broadcast(hits), Seq("security_id"))
-        .groupBy("security_id")
-        .agg(sum(round(col("p") * 100).cast("long")).as("value_cents"))
-      Lake.overwritePartitions(fund, root, "fundamental", Seq("security_id"))
-      // 6. sentiment append: only unseen accessions (I4 anti-join)
-      val inc = filed.select(col("o_orderkey").as("accession"),
-        sid.as("security_id"), (col("o_orderkey") % 100).as("score"))
-      val n = Jobs.appendNewFilings(s, inc, root, "sentiment", "accession")
-      Await.result(ticksF, scala.concurrent.duration.Duration.Inf)
+      // fundamental/sentiment — independent jobs, so run the two chains
+      // together and let the ticks tail back-fill with the filings chain
+      // (guide §2.6: the day's steps are only sequential where they truly
+      // depend). Both chains are awaited on every path: a failure in one
+      // surfaces only once the other has finished.
+      // The refresh counts no filings (0L), so the day's count is the
+      // filings chain's.
+      val refresh = () => { if (trading) Jobs.updateDailyTicks(s, slice, root); 0L }
+      val filings = () => {
+        // 4. recent-filings probe → hit securities (7-day lookback)
+        val hits = filed.select(sid.as("security_id")).distinct()
+        // 5. fundamental republish for hit securities (partition overwrite —
+        // idempotent; hits is dimension-sized so the join broadcasts)
+        val fund = orders.select(sid.as("security_id"),
+            col("o_totalprice").as("p"))
+          .join(broadcast(hits), Seq("security_id"))
+          .groupBy("security_id")
+          .agg(sum(round(col("p") * 100).cast("long")).as("value_cents"))
+        Lake.overwritePartitions(fund, root, "fundamental", Seq("security_id"))
+        // 6. sentiment append: only unseen accessions (I4 anti-join)
+        val inc = filed.select(col("o_orderkey").as("accession"),
+          sid.as("security_id"), (col("o_orderkey") % 100).as("score"))
+        Jobs.appendNewFilings(s, inc, root, "sentiment", "accession")
+      }
+      val n = graft.DriverPool.all(s)(refresh, filings).last
       (m, trading, n)
     }
 

@@ -2,18 +2,26 @@ package graft.ticks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.lake.Lake
+import graft.lake.{Lake, PartitionPath}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.master.SecurityMaster
 
 /** The symbol-level read path (§3.3 — reference storage/clients/ticks.py):
   * `getDailyTicks` and `getMinuteTicks` resolve the symbol on the driver
-  * against the temporal master, then scan the lake filtered by literal
-  * security_ids (PartitionFilters) and date bounds (pushed filters): the
-  * read plan holds no join. Fuzzy bulk (symbol, day) resolution is
+  * against the temporal master, then read exactly the resolved
+  * securities' partition directories ([[Lake.readDirs]]): a daily read
+  * lists `security_id=<sid>/` once per resolved sid and keeps the `year=`
+  * children inside the resolved dates, a year or minute read opens its
+  * one directory. The schema comes from `Lake`'s per-table cache, so a
+  * read builds without listing the table or inferring its schema; the
+  * literal security_id and date filters stay on the scan. The read plan
+  * holds no join. Fuzzy bulk (symbol, day) resolution is
   * [[SecurityMaster.resolve]] (`resolveSymbols`).
   *
   * The reference's hand-rolled month routing and (symbol, year) caches
-  * (ticks.py:130-171,271-292) dissolve into Catalyst partition pruning.
+  * (ticks.py:130-171,271-292) dissolve into the resolver and the literal
+  * partition directories.
   */
 class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
 
@@ -23,11 +31,26 @@ class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
     * columns, then symbol; rows ordered by date.
     */
   def getDailyTicks(symbol: String, start: String, end: String): DataFrame = {
-    val inRange = resolve(symbol, start, end)
+    val intervals = resolve(symbol, start, end)
+    val inRange = intervals
       .map { case (sid, lo, hi) =>
         col("security_id") === sid && col("date").between(lit(lo), lit(hi)) }
       .reduceOption(_ || _).getOrElse(lit(false))
-    val ticks = Lake.read(spark, root, "daily_ticks")
+    // one listing per resolved sid; a year directory is read when some
+    // interval of its sid overlaps the year
+    val dirs = intervals.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
+      case (sid, ivs) =>
+        val sidDir = TicksClient.dir(spark, Seq("security_id" -> sid))
+        childDirs(TicksClient.DailyTable, sidDir).filter { child =>
+          PartitionPath.layout(child) match {
+            case Seq(_, ("year", y)) if y != null && y.forall(_.isDigit) =>
+              ivs.exists { case (_, lo, hi) =>
+                yearOf(lo) <= y.toInt && y.toInt <= yearOf(hi) }
+            case _ => false
+          }
+        }
+    }
+    val ticks = Lake.readDirs(spark, root, TicksClient.DailyTable, dirs)
     ticks.filter(inRange)
       .select(col("security_id") +:
         ticks.columns.filterNot(_ == "security_id").toSeq.map(col): _*)
@@ -64,11 +87,14 @@ class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
     getDailyTicks(symbol,
       start.getOrElse("1900-01-01"), end.getOrElse("9999-12-31"))
 
-  /** Year read with explicit partition-prunable predicates (S9 point read):
-    * security_id and year reach the scan as PartitionFilters.
+  /** Year read (S9 point read): the one `security_id=/year=` directory,
+    * when it exists, with security_id and year still filtered as
+    * PartitionFilters.
     */
   def getYear(securityId: Long, year: Int): DataFrame =
-    Lake.read(spark, root, "daily_ticks")
+    Lake.readDirs(spark, root, TicksClient.DailyTable, existing(
+        TicksClient.DailyTable,
+        TicksClient.dir(spark, Seq("security_id" -> securityId, "year" -> year))))
       .filter(col("security_id") === securityId && col("year") === year)
       .orderBy(col("date"))
 
@@ -83,7 +109,8 @@ class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
     * storage/clients/ticks.py:130-146). The symbol resolves AS OF the
     * requested day (strictly more correct than the reference's year-end
     * resolution across an intra-year rename), and the read reaches the
-    * scan as static PartitionFilters on all four partition columns —
+    * scan as its day directories alone (`security_id=/year=/month=/day=`,
+    * those that exist), still filtered by all four partition columns —
     * the {sid}/{Y}/{MM}/{DD} directory walk with no IO outside the day.
     *
     * The sid lookup is the driver-side `resolve` `getDailyTicks` uses,
@@ -97,12 +124,41 @@ class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
   def getMinuteTicks(symbol: String, day: String): DataFrame = {
     val d = java.time.LocalDate.parse(day)
     val sids = resolve(symbol, day, day).map(_._1)
-    Lake.read(spark, root, TicksClient.MinuteTable)
+    val dirs = sids.distinct.flatMap(sid => existing(TicksClient.MinuteTable,
+      TicksClient.dir(spark, Seq("security_id" -> sid, "year" -> d.getYear,
+        "month" -> d.getMonthValue, "day" -> d.getDayOfMonth))))
+    Lake.readDirs(spark, root, TicksClient.MinuteTable, dirs)
       .filter(col("security_id").isin(sids: _*) &&
         col("year") === d.getYear && col("month") === d.getMonthValue &&
         col("day") === d.getDayOfMonth)
       .withColumn("symbol", lit(symbol))
       .orderBy(col("ts"))
+  }
+
+  private def fs(table: String): (FileSystem, Path) = {
+    val p = new Path(s"$root/$table")
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  /** `dir` (relative to `table`) when it exists: one stat. */
+  private def existing(table: String, dir: String): Seq[String] = {
+    val (f, base) = fs(table)
+    if (f.exists(new Path(base, dir))) Seq(dir) else Nil
+  }
+
+  /** The directories right under `dir` (relative to `table`), as
+    * `dir/child/`: one listing, none when `dir` is absent. */
+  private def childDirs(table: String, dir: String): Seq[String] = {
+    val (f, base) = fs(table)
+    val p = new Path(base, dir)
+    if (!f.exists(p)) Nil
+    else f.listStatus(p).toSeq.filter(_.isDirectory)
+      .map(c => s"$dir${c.getPath.getName}/")
+  }
+
+  private def yearOf(d: Any): Int = d match {
+    case d: java.time.LocalDate => d.getYear
+    case d: java.sql.Date => d.toLocalDate.getYear
   }
 
   /** (security_id, first day, last day) of each master interval carrying
@@ -124,6 +180,14 @@ class TicksClient(spark: SparkSession, root: String, master: DataFrame) {
 object TicksClient {
 
   val MinuteTable = "minute_ticks"
+  private val DailyTable = "daily_ticks"
+
+  /** `c=v/…/` for partition values in order, spelled by [[PartitionPath]]
+    * (integral values read back as written by `partitionBy`). */
+  private def dir(spark: SparkSession, values: Seq[(String, Long)]): String =
+    PartitionPath.of(spark,
+      StructType(values.map { case (c, _) => StructField(c, LongType) }),
+      values.map(_._2))
 
   /** Write minute bars into the {sid}/{Y}/{MM}/{DD} layout. Partition
     * columns derive from the stored ET wall-clock `ts` — the reference's

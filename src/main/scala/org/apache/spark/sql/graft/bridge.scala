@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -13,7 +14,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *
   *  - Column ↔ Expression conversion (Spark 4's ColumnNode-backed Column
   *    API), for native Catalyst expressions exposed as Columns;
-  *  - `Dataset.ofRows`, for custom LogicalPlans surfaced as DataFrames.
+  *  - `Dataset.ofRows`, for custom LogicalPlans surfaced as DataFrames;
+  *  - a thread's Spark local properties (job group, description,
+  *    scheduler pool), which [[graft.DriverPool]] carries onto its legs.
   */
 object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,4 +25,11 @@ object bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A copy of this thread's local properties. */
+  def localProperties(sc: SparkContext): java.util.Properties =
+    org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+
+  def setLocalProperties(sc: SparkContext, props: java.util.Properties): Unit =
+    sc.setLocalProperties(props)
 }

@@ -2,7 +2,6 @@ package graft.lake
 
 import graft.SparkTestBase
 import graft.sql.GraftCatalog
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.streaming.Trigger
@@ -184,32 +183,13 @@ class PartitionPathSpec extends SparkTestBase {
     val mark = udf { (p: String) => evaluated.add(1); p }.asNondeterministic()
     val input = Seq((3L, "a"), (4L, "c")).toDF("k", "p0")
       .select(col("k"), mark(col("p0")).as("p"))
-    val group = s"partition-path-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach { g =>
-            if (g == group) jobs.incrementAndGet()
-            if (g == s"$group-drain") drained.countDown()
-          }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "commit")
-      try Snapshots.commit(input, root, "t", Seq("p"))
-      finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-drain", "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    info(s"${jobs.get} Spark jobs for one commit")
+    val (_, jobs) = jobsOf("commit")(Snapshots.commit(input, root, "t", Seq("p")))
+    info(s"$jobs Spark jobs for one commit")
     // the input plan runs once, inside the write: each row is evaluated
     // once, and the commit runs only the write's own jobs (the
     // clustering shuffle and the file write)
     assert(evaluated.value === 2L)
-    assert(jobs.get <= 2, s"${jobs.get} jobs for one commit")
+    assert(jobs <= 2, s"$jobs jobs for one commit")
     assert(Snapshots.readVersion(spark, root, "t", 2L).as[(Long, String)]
       .collect().toSet === Set((3L, "a"), (2L, "b"), (4L, "c")))
   }

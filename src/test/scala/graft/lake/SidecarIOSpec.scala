@@ -1,7 +1,6 @@
 package graft.lake
 
 import graft.SparkTestBase
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -16,34 +15,6 @@ class SidecarIOSpec extends SparkTestBase {
 
   private def freshRoot(): String =
     java.nio.file.Files.createTempDirectory("sidecar_io").toString
-
-  /** `body`'s result and the Spark jobs it started on this thread (scoped
-    * by a job group; a drain job flushes the listener bus first). */
-  private def jobsOf[T](tag: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"sidecar-jobs-$tag-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach { g =>
-            if (g == group) jobs.incrementAndGet()
-            if (g == s"$group-drain") drained.countDown()
-          }
-    }
-    def inGroup[R](g: String)(b: => R): R = {
-      sc.setJobGroup(g, tag)
-      try b finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = inGroup(group)(body)
-      inGroup(s"$group-drain")(sc.parallelize(Seq(1), 1).count())
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("driver-written sidecar: Spark-readable, stats carry across commits") {
     val root = freshRoot()

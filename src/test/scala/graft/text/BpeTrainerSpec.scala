@@ -1,7 +1,6 @@
 package graft.text
 
 import graft.SparkTestBase
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class BpeTrainerSpec extends SparkTestBase {
   import spark.implicits._
@@ -98,38 +97,14 @@ class BpeTrainerSpec extends SparkTestBase {
   }
 
   test("at most 3 Spark jobs per round plus a constant") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith("bpe-jobs-")).foreach { g =>
-            jobs.merge(g, 1, (a: Integer, b: Integer) => a + b)
-            if (g == "bpe-jobs-drain") drained.countDown()
-          }
-    }
     // 30 docs of 40 tokens over 3 words: pairs never run out in 6 rounds
     val rnd = new scala.util.Random(5)
     val docs = (0 until 30).map(i => (i.toLong,
       Seq.fill(40)(Seq("x", "y", "z")(rnd.nextInt(3))).mkString(" ")))
       .toDF("doc_id", "text")
-    def inGroup[T](g: String)(body: => T): T = {
-      sc.setJobGroup(s"bpe-jobs-$g", g)
-      try body finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      for (rounds <- Seq(1, 6)) inGroup(rounds.toString) {
-        assert(BpeTrainer.train(docs, "text", "doc_id", rounds).count() === rounds)
-      }
-      // the listener bus delivers in order: once the drain job's start is
-      // seen, every job above has been counted
-      inGroup("drain")(sc.parallelize(Seq(1), 1).count())
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    val one: Int = jobs.getOrDefault("bpe-jobs-1", 0)
-    val six: Int = jobs.getOrDefault("bpe-jobs-6", 0)
+    val Seq(one, six) = Seq(1, 6).map(rounds => jobsOf(rounds.toString) {
+      assert(BpeTrainer.train(docs, "text", "doc_id", rounds).count() === rounds)
+    }._2)
     assert(six - one <= 3 * 5, s"1 round: $one jobs, 6 rounds: $six jobs")
     assert(one <= 3 + 3, s"1 round: $one jobs")
   }

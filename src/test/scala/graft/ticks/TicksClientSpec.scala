@@ -6,7 +6,29 @@ import graft.lake.Lake
 import graft.master.SecurityMaster
 import java.sql.Date
 import java.nio.file.Files
+import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, LocatedFileStatus, Path, RemoteIterator}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+/** The local filesystem, recording the path of every directory listing. */
+class ListCountingFs extends FilterFileSystem(new graft.lake.NoForkLocalFileSystem) {
+  override def listStatus(p: Path): Array[FileStatus] = {
+    ListCountingFs.listed.add(p.toUri.getPath); super.listStatus(p)
+  }
+  override def listStatusIterator(p: Path): RemoteIterator[FileStatus] = {
+    ListCountingFs.listed.add(p.toUri.getPath); super.listStatusIterator(p)
+  }
+  override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] = {
+    ListCountingFs.listed.add(p.toUri.getPath); super.listLocatedStatus(p)
+  }
+  override def listFiles(p: Path, recursive: Boolean): RemoteIterator[LocatedFileStatus] = {
+    ListCountingFs.listed.add(p.toUri.getPath); super.listFiles(p, recursive)
+  }
+}
+
+object ListCountingFs {
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
 
 /** The §7.3 end-to-end slice: adjusted daily closes for a symbol over a
   * rename boundary — master build → lake write → symbol-resolved,
@@ -90,11 +112,7 @@ class TicksClientSpec extends SparkTestBase {
 
   test("a symbol reused by two securities reads each era from its own security") {
     val (metaSid, otherSid) = (sidOf("META"), sidOf("ZZZ"))
-    val reused = Seq(
-      ("REUSED", otherSid, d("2022-01-01"), d("2023-06-30")),
-      ("REUSED", metaSid, d("2023-07-01"), d("2024-12-31")))
-      .toDF("symbol", "security_id", "start_date", "end_date")
-    val got = new TicksClient(spark, root, reused)
+    val got = new TicksClient(spark, root, reusedMaster)
       .getDailyTicks("REUSED", "2023-06-01", "2024-02-01")
       .select($"security_id".cast("long"), $"date", $"close")
       .as[(Long, Date, Double)].collect().toSeq
@@ -128,6 +146,97 @@ class TicksClientSpec extends SparkTestBase {
       .findFirstIn(plan).nonEmpty, plan)
     assert(!plan.contains("dynamicpruningexpression"), plan)
     assert(!plan.contains("BroadcastHashJoin"), plan)
+  }
+
+  /** The whole-table listing read's output schema (names, types, order)
+    * for a daily read of `symbol`. */
+  private def listingSchema(symbol: String) = {
+    val ticks = Lake.read(spark, root, "daily_ticks")
+    ticks.select(col("security_id") +:
+        ticks.columns.filterNot(_ == "security_id").toSeq.map(col): _*)
+      .withColumn("symbol", lit(symbol)).schema
+      .map(f => (f.name, f.dataType))
+  }
+
+  private def reusedMaster = Seq(
+      ("REUSED", sidOf("ZZZ"), d("2022-01-01"), d("2023-06-30")),
+      ("REUSED", sidOf("META"), d("2023-07-01"), d("2024-12-31")))
+    .toDF("symbol", "security_id", "start_date", "end_date")
+
+  test("the output schema equals the listing read's across a rename, " +
+      "for a reused symbol and for an unknown symbol") {
+    def schemaOf(df: DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(schemaOf(client.getDailyTicks("FB", "2023-06-01", "2024-02-01")) ===
+      listingSchema("FB"))
+    assert(schemaOf(new TicksClient(spark, root, reusedMaster)
+      .getDailyTicks("REUSED", "2023-06-01", "2024-02-01")) === listingSchema("REUSED"))
+    assert(schemaOf(client.getDailyTicks("NOPE", "2023-06-01", "2024-02-01")) ===
+      listingSchema("NOPE"))
+    val year = Lake.read(spark, root, "daily_ticks").schema
+    assert(client.getYear(sidOf("META"), 2024).schema === year)
+    assert(client.getYear(sidOf("META"), 1990).schema === year)
+  }
+
+  test("a built read starts no Spark job but the resolver's master collect") {
+    val sid = sidOf("META")
+    TicksClient.writeMinuteTicks(Seq((sid, "2023-07-03 10:00:00", 5L))
+      .toDF("security_id", "ts_s", "volume")
+      .select($"security_id", $"ts_s".cast("timestamp_ntz").as("ts"), $"volume"),
+      root)
+    val builds = Seq(
+      "daily" -> (() => client.getDailyTicks("META", "2023-06-01", "2024-02-01")),
+      "year" -> (() => client.getYear(sid, 2023)),
+      "minute" -> (() => client.getMinuteTicks("META", "2023-07-03")))
+    val firsts = builds.map(_._2()) // the first reads fill the schema cache
+    val jobs = builds.map { case (tag, build) => tag -> jobsOf(tag)(build())._2 }
+    assert(jobs === Seq("daily" -> 1, "year" -> 0, "minute" -> 1))
+    assert(firsts.map(_.count()) === Seq(2L, 3L, 1L))
+  }
+
+  test("a symbol read lists only its own security_id directories") {
+    val sid = sidOf("META")
+    client.getDailyTicks("META", "2023-06-01", "2024-02-01").collect() // warm
+    val hc = spark.sparkContext.hadoopConfiguration
+    val before = (hc.get("fs.file.impl"), Option(hc.get("fs.file.impl.disable.cache")))
+    ListCountingFs.listed.clear()
+    hc.set("fs.file.impl", classOf[ListCountingFs].getName)
+    hc.setBoolean("fs.file.impl.disable.cache", true)
+    val rows = try {
+      client.getDailyTicks("META", "2023-06-01", "2024-02-01").collect()
+    } finally {
+      hc.set("fs.file.impl", before._1)
+      before._2.fold(hc.unset("fs.file.impl.disable.cache"))(
+        hc.set("fs.file.impl.disable.cache", _))
+    }
+    assert(rows.length === 2)
+    val listed = ListCountingFs.listed.toArray.toSeq.map(_.toString)
+    val table = new Path(s"$root/daily_ticks").toUri.getPath
+    val own = s"$table/security_id=$sid"
+    assert(listed.nonEmpty)
+    assert(listed.forall(p => p == own || p.startsWith(s"$own/")), listed)
+  }
+
+  test("a new security_id from overwritePartitions and a column from a raw " +
+      "write are seen by the next read") {
+    val r = Files.createTempDirectory("graft_refresh").toUri.toString.stripSuffix("/")
+    val m = Seq(("A", 1L, d("2020-01-01"), d("9999-12-31")),
+        ("B", 2L, d("2020-01-01"), d("9999-12-31")))
+      .toDF("symbol", "security_id", "start_date", "end_date")
+    def bars(sid: Long) = Seq((sid, d("2023-03-01"), 1.0 * sid))
+      .toDF("security_id", "date", "close").withColumn("year", year($"date"))
+    Lake.overwritePartitions(bars(1L), r, "daily_ticks", Seq("security_id", "year"))
+    val c = new TicksClient(spark, r, m)
+    assert(c.getDailyTicks("A", "2023-01-01", "2023-12-31").count() === 1)
+    assert(c.getDailyTicks("B", "2023-01-01", "2023-12-31").count() === 0)
+    Lake.overwritePartitions(bars(2L), r, "daily_ticks", Seq("security_id", "year"))
+    assert(c.getDailyTicks("B", "2023-01-01", "2023-12-31").count() === 1)
+    // a writer outside Lake rewrites the table with one more column
+    bars(1L).union(bars(2L)).withColumn("volume", lit(7L))
+      .write.mode("overwrite").partitionBy("security_id", "year")
+      .parquet(s"$r/daily_ticks")
+    val got = c.getDailyTicks("A", "2023-01-01", "2023-12-31")
+    assert(got.columns.contains("volume"), got.columns.toSeq)
+    assert(got.select("volume").as[Long].collect().toSeq === Seq(7L))
   }
 
   test("partition pruning: year read plans PartitionFilters") {
